@@ -98,7 +98,6 @@ def main(argv=None, spark=None) -> int:
     parser.add_argument("--out", required=True, help="survivor output dir")
     parser.add_argument("--day", required=True, help="partition label, e.g. 2024-03-05")
     parser.add_argument("--langs", default="", help="comma-separated lang filter")
-    parser.add_argument("--max-try", type=int, default=2)
     parser.add_argument("--master", default=None)
     parser.add_argument(
         "--blocklist",
@@ -280,9 +279,7 @@ def main(argv=None, spark=None) -> int:
             delta_pages = pages.join(delta_urls, "url", "left_semi")
 
         # --- extraction over the delta only ---------------------------------
-        docs = extract_pages(delta_pages, patterns, max_try=args.max_try).filter(
-            F.col("status") == "ok"
-        )
+        docs = extract_pages(delta_pages, patterns).filter(F.col("status") == "ok")
 
         # --- content hygiene: the standard webtext funnel on extracted text -
         n_quality_dropped = 0

@@ -23,7 +23,6 @@ def main(argv=None) -> int:
     parser.add_argument("--buckets", type=int, default=64)
     parser.add_argument("--langs", default="en,zh,de")
     parser.add_argument("--master", default=None)
-    parser.add_argument("--max-try", type=int, default=5)
     parser.add_argument(
         "--concurrency",
         type=int,
@@ -60,7 +59,7 @@ def main(argv=None) -> int:
     result = run_with_manifest(
         spark,
         pages,
-        lambda df: extract_pages(df, patterns, max_try=args.max_try),
+        lambda df: extract_pages(df, patterns),
         args.out,
         n_buckets=args.buckets,
         max_concurrency=args.concurrency,

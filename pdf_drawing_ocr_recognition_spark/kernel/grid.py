@@ -18,9 +18,9 @@ constants — the encoder and decoder must agree, and both are ours):
 - a zero byte (all-white column) terminates the cell's text.
 
 Decoded cell texts are assembled row-major, cells joined by TAB and rows by
-NEWLINE — this raw string then flows through the retry/parse machinery
-(kernel/parse.py) exactly like the reference's LLM reply would
-(pdor/pdor_unit.py:226-260).
+NEWLINE — this raw string then goes once through the error-prefix filter and
+literal parse (kernel/parse.py), as the reference's LLM reply would
+(pdor/pdor_unit.py:238-249); being deterministic, it is never retried.
 """
 
 from __future__ import annotations

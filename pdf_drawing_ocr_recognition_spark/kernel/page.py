@@ -14,8 +14,9 @@ Document lifecycle — a faithful generalization of the reference's
    rasters; anything else → UTF-8 HTML;
 3. per page × per pattern sub-box: crop (ref :197-204, kernel/crop.py) →
    deterministic decode leaf (replaces the LLM call, ref pdor/pdor_llm.py:15-71;
-   SURVEY.md D2) → bounded retry loop with error-prefix filter and literal
-   parse (ref :226-260, kernel/parse.py);
+   SURVEY.md D2) → error-prefix filter and literal parse (ref :238-249,
+   kernel/parse.py), once: the reference's retry loop (ref :226-260) exists
+   because an LLM reply varies between calls, and this decode does not;
 4. zero parsed sub-images → status 'failed', error_kind 'LLMError'
    (ref :262-268).  Unlike the reference's A18 echo-gated break bug
    (ref :257-260), a failed sub-image never aborts the remaining ones —
@@ -42,7 +43,6 @@ from .png import decode_png
 from .render import PLAINTEXT_TITLE, format_value, render_plaintext
 
 GRID_MAGIC = b"GRIDDOC1"
-DEFAULT_MAX_TRY = 5  # ref configs.ini:21-23 preset, bounds 1-10 pdor/pdor_utils.py:170-171
 FULL_PAGE_BOX = [0.0, 100.0, 0.0, 100.0]  # ref pdor/pdor_pattern.py:73 default
 
 PLAINTEXT_HEADER = PLAINTEXT_TITLE + "\n" + "=" * 50 + "\n\n"
@@ -106,15 +106,6 @@ def is_grid_payload(payload: bytes) -> bool:
     return payload is not None and payload[: len(GRID_MAGIC)] == GRID_MAGIC
 
 
-def decode_sub_image(gray, box) -> str:
-    """Deterministic decode leaf for one pattern sub-box of one page raster.
-
-    Crop per the reference's pct arithmetic, then grid-decode the crop into the
-    raw assembled string (the stand-in for the LLM reply — SURVEY.md D2).
-    """
-    return decode_grid_image(crop(gray, tuple(box)))
-
-
 def maybe_deskew(gray):
     """Deskew gate (north-star: render → deskew/binarize → grid detection).
 
@@ -135,28 +126,24 @@ def maybe_deskew(gray):
     return fixed, True, angle
 
 
-def attempt_sub_image(
-    gray, box, max_try: int, jittered: bool = False
-) -> tuple[bool, dict, str, int]:
-    """Bounded retry loop around the decode leaf (ref pdor/pdor_unit.py:226-260).
+def attempt_sub_image(gray, box, jittered: bool = False) -> tuple[bool, dict, str, int]:
+    """Decode one pattern sub-box of one page raster (ref pdor/pdor_unit.py:226-260).
 
-    Returns (ok, parsed_dict, raw, attempts).  The leaf is deterministic, so a
-    bad result repeats; the loop still runs its full budget, mirroring the
-    reference's first-success/continue structure (error-prefix filter ref
-    :238-241, parse ref :243-249).
+    Crop per the reference's pct arithmetic, grid-decode the crop into the raw
+    assembled string (the stand-in for the LLM reply — SURVEY.md D2), then
+    apply the error-prefix filter (ref :238-241) and literal parse (ref
+    :243-249).  Returns (ok, parsed_dict, raw, attempts) with attempts always
+    1: the decode is deterministic, so a retry would repeat this result, and
+    a leaf exception (ref :254-256) is a failed sub-image.
     """
-    raw = ""
-    for attempt in range(1, max_try + 1):
-        try:
-            raw = decode_grid_image(crop(gray, tuple(box)), jittered=jittered)
-        except Exception:
-            continue  # ref :254-256 — any leaf exception retries
-        if is_error_result(raw):
-            continue
-        ok, parsed = parse_literal_result(raw)
-        if ok:
-            return True, parsed, raw, attempt
-    return False, {}, raw, max_try
+    try:
+        raw = decode_grid_image(crop(gray, tuple(box)), jittered=jittered)
+    except Exception:
+        return False, {}, "", 1
+    if is_error_result(raw):
+        return False, {}, raw, 1
+    ok, parsed = parse_literal_result(raw)
+    return ok, parsed, raw, 1
 
 
 def _stringify_fields(d: dict[str, Any]) -> dict[str, str]:
@@ -172,12 +159,14 @@ def extract_document(
     html: bytes | None,
     lang: str | None,
     patterns: dict[str, dict],
-    max_try: int = DEFAULT_MAX_TRY,
+    max_try: int = 1,
 ) -> dict[str, Any]:
     """Extract one document → output-row dict (SURVEY.md D4 schema).
 
     Returns keys: url, status, error_kind, spans (list of {group, idx, fields}),
-    extracted_text, n_cells, n_subs_failed.
+    extracted_text, n_cells, n_subs_failed.  *max_try* no longer affects the
+    output: each sub-image is decoded once (see ``attempt_sub_image``); the
+    parameter stays only for callers that pass it positionally.
     """
     if html is None or len(html) == 0:
         return {
@@ -191,7 +180,7 @@ def extract_document(
         }
 
     if is_grid_payload(html):
-        return _extract_grid(url, html, patterns, max_try)
+        return _extract_grid(url, html, patterns)
     return _extract_html(url, html)
 
 
@@ -223,7 +212,7 @@ def _extract_html(url: str, html: bytes) -> dict[str, Any]:
 
 
 def _extract_grid(
-    url: str, payload: bytes, patterns: dict[str, dict], max_try: int
+    url: str, payload: bytes, patterns: dict[str, dict]
 ) -> dict[str, Any]:
     try:
         pattern_name, page_pngs = parse_grid_container(payload)
@@ -264,9 +253,7 @@ def _extract_grid(
             continue
         gray, jittered, _angle = maybe_deskew(gray)
         for sub_idx, box in enumerate(sub_imgs):
-            ok, parsed, raw, _attempts = attempt_sub_image(
-                gray, box, max_try, jittered=jittered
-            )
+            ok, parsed, raw, _attempts = attempt_sub_image(gray, box, jittered=jittered)
             if ok:
                 results.append((sub_idx, parsed))
                 spans.append(

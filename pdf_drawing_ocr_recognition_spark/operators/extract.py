@@ -1,6 +1,6 @@
 """Distributed extraction operator — Arrow-batched ``mapInPandas`` over pages.
 
-The whole reference pipeline (load → imagify → crop → decode → retry/parse →
+The whole reference pipeline (load → imagify → crop → decode → filter/parse →
 merge → render; pdor/pdor_unit.py:298-321) collapses into ONE narrow Spark
 stage: a document is one row, its pages live inside the ``html`` payload, so
 per-document assembly needs no shuffle at all.  ``mapInPandas`` streams Arrow
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel.page import DEFAULT_MAX_TRY, extract_document
+from ..kernel.page import extract_document
 
 EXTRACT_SCHEMA = T.StructType(
     [
@@ -52,11 +52,7 @@ EXTRACT_SCHEMA = T.StructType(
 )
 
 
-def extract_pages(
-    pages: DataFrame,
-    patterns: dict[str, dict],
-    max_try: int = DEFAULT_MAX_TRY,
-) -> DataFrame:
+def extract_pages(pages: DataFrame, patterns: dict[str, dict]) -> DataFrame:
     """pages(url, html, lang, ...) → extraction output (SURVEY.md D4 schema).
 
     *patterns* is the small pattern dimension (ref registry,
@@ -69,7 +65,7 @@ def extract_pages(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [
-                extract_document(url, html, lang, patterns, max_try)
+                extract_document(url, html, lang, patterns)
                 for url, html, lang in zip(pdf["url"], pdf["html"], pdf["lang"])
             ]
             yield pd.DataFrame(

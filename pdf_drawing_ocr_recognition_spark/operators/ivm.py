@@ -233,13 +233,12 @@ def maintain_agg(
     ]
     count_out = next(out for out, k, _c in alg if k == "count")
     for out, _kind, _col in alg:
+        # a side that is NULL (group absent, or an all-NULL sum) adds
+        # nothing; both NULL stays NULL, as the direct sum of an all-NULL
+        # group is
+        stored, change = F.col(out), F.col("__d_" + out)
         sel.append(
-            (
-                F.coalesce(F.col(out), F.lit(0))
-                + F.coalesce(F.col("__d_" + out), F.lit(0))
-            )
-            .cast("long")
-            .alias(out)
+            F.coalesce(stored + change, stored, change).cast("long").alias(out)
         )
     for out, _kind, _col in ext:
         sel.append(F.col(out))  # replaced below for dirty groups

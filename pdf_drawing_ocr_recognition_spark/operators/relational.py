@@ -8,8 +8,8 @@ reference's loop nest as relational operators (SURVEY.md §3.1):
     pages → mapInPandas page-explode (A4: one row per page raster)
           → broadcast join with the pattern dim on pattern_name (A40)
           → posexplode(sub_imgs) (A5: one row per pattern box)
-          → mapInPandas decode leaf (A7/A8/A11-A16: crop → grid decode →
-            bounded retry → literal parse)
+          → mapInPandas decode leaf (A7/A8/A11-A16: kernel.page.attempt_sub_image
+            — crop → grid decode → error filter → literal parse, once)
           → groupBy(url) + explicit (page_idx, sub_idx) sort inside
             applyInPandas (A20/M3: merge fold + canonical render)
 
@@ -28,17 +28,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernel.crop import crop
-from ..kernel.grid import decode_grid_image
 from ..kernel.merge import merge_fold
 from ..kernel.page import (
-    DEFAULT_MAX_TRY,
     FULL_PAGE_BOX,
+    attempt_sub_image,
     is_grid_payload,
     maybe_deskew,
     parse_grid_container,
 )
-from ..kernel.parse import is_error_result, parse_literal_result
 from ..kernel.png import decode_png
 from ..kernel.render import render_plaintext
 
@@ -86,7 +83,7 @@ def pattern_dim(spark: SparkSession, patterns: dict[str, dict]) -> DataFrame:
     )
 
 
-def decode_leaf(sub_images: DataFrame, max_try: int = DEFAULT_MAX_TRY) -> DataFrame:
+def decode_leaf(sub_images: DataFrame) -> DataFrame:
     """A7/A8/A11-A16 decode leaf over (url, page_idx, sub_idx, png, box) rows."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -95,23 +92,13 @@ def decode_leaf(sub_images: DataFrame, max_try: int = DEFAULT_MAX_TRY) -> DataFr
             for url, page_idx, sub_idx, png, box in zip(
                 pdf["url"], pdf["page_idx"], pdf["sub_idx"], pdf["png"], pdf["box"]
             ):
-                ok, fields = False, None
-                jittered = False
                 try:
-                    gray = decode_png(bytes(png))
-                    gray, jittered, _angle = maybe_deskew(gray)
+                    gray, jittered, _angle = maybe_deskew(decode_png(bytes(png)))
                 except Exception:
-                    gray = None
-                if gray is not None:
-                    for _attempt in range(1, max_try + 1):
-                        raw = decode_grid_image(crop(gray, tuple(box)), jittered=jittered)
-                        if is_error_result(raw):
-                            continue
-                        parsed_ok, parsed = parse_literal_result(raw)
-                        if parsed_ok:
-                            ok = True
-                            fields = {str(k): str(v) for k, v in parsed.items()}
-                            break
+                    ok, fields = False, None
+                else:
+                    ok, parsed, _raw, _attempts = attempt_sub_image(gray, box, jittered)
+                    fields = {str(k): str(v) for k, v in parsed.items()} if ok else None
                 out.append(
                     {
                         "url": url,
@@ -160,7 +147,6 @@ def relational_extract(
     spark: SparkSession,
     pages: DataFrame,
     patterns: dict[str, dict],
-    max_try: int = DEFAULT_MAX_TRY,
 ) -> DataFrame:
     """Full exploded pipeline (grid documents only)."""
     exploded = explode_pages(pages)
@@ -172,5 +158,5 @@ def relational_extract(
         "png",
         F.posexplode("sub_imgs").alias("sub_idx", "box"),
     )
-    decoded = decode_leaf(sub_images, max_try=max_try)
+    decoded = decode_leaf(sub_images)
     return assemble(decoded)

@@ -27,7 +27,6 @@ def extraction_pipeline(
     patterns: dict[str, dict],
     langs: tuple[str, ...] = TARGET_LANGS,
     repartition: int | None = None,
-    max_try: int = 5,
 ) -> DataFrame:
     """The flagship job: pages table → extraction output table.
 
@@ -38,4 +37,4 @@ def extraction_pipeline(
     pages = read_pages(spark, pages_path, langs=langs)
     if repartition:
         pages = salted_repartition(pages, repartition)
-    return extract_pages(pages, patterns, max_try=max_try)
+    return extract_pages(pages, patterns)

@@ -27,7 +27,7 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = _resolve_master(master)
     cores = master.count("*") and os.cpu_count() or _local_n(master)
     builder = (
         SparkSession.builder.appName(app)
@@ -55,6 +55,13 @@ def build_session(
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _resolve_master(master: str | None) -> str:
+    """Explicit *master*, else ``SPARK_GRAFT_MASTER``, else ``local[N]`` with N
+    from ``SPARK_GRAFT_CPUS`` or the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
 
 
 def _local_n(master: str) -> int:

@@ -967,6 +967,10 @@ def commit_staged_files(
         name = f"{commit_uuid}-{i:05d}.parquet"
         md = pq.ParquetFile(src).metadata
         if md.num_rows == 0:
+            try:
+                os.remove(src)
+            except OSError:
+                pass
             continue
         n_rows += md.num_rows
         stats[name] = _file_column_stats(md)

@@ -295,20 +295,32 @@ class TestExtractDocument:
         r = extract_document("u", b"", "en", self._patterns())
         assert r["status"] == "empty"
 
-    def test_error_prefix_exhausts_retries(self):
-        # A12/A13: deterministic 'Error:' decode fails max_try times → failed
+    def test_error_prefix_decodes_once(self, monkeypatch):
+        # A12/A13: an 'Error:' decode is a failed sub-image → failed doc.  The
+        # decode is deterministic, so it runs once per sub-image: a retry
+        # budget would only repeat the same result
         from pdf_drawing_ocr_recognition_spark.fixtures.gen_pages import (
             PATTERNS,
             build_griddoc,
             build_page_image,
         )
         from pdf_drawing_ocr_recognition_spark.kernel import extract_document
+        from pdf_drawing_ocr_recognition_spark.kernel import page as kp
 
+        calls = []
+        decode = kp.decode_grid_image
+
+        def counting_decode(*args, **kwargs):
+            calls.append(1)
+            return decode(*args, **kwargs)
+
+        monkeypatch.setattr(kp, "decode_grid_image", counting_decode)
         img = build_page_image(PATTERNS["fullpage"], [[["Error:", "x"]]])
         doc = build_griddoc("fullpage", [img])
         r = extract_document("u", doc, "en", PATTERNS)
         assert r["status"] == "failed" and r["error_kind"] == "LLMError"
         assert r["n_subs_failed"] == 1
+        assert len(calls) == 1
 
     def test_failed_sub_does_not_abort_rest(self):
         # A18 documented intent (NOT the reference's echo-gated break bug):

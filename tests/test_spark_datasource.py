@@ -201,6 +201,24 @@ def test_no_stage_debris_and_orphan_lifecycle(spark, root):
     assert not os.path.exists(stray)
 
 
+def test_empty_write_task_leaves_no_stage_file(root):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    data = S._data_dir(root)
+    os.makedirs(data, exist_ok=True)
+    staged = []
+    for i, vals in enumerate([[], [1, 2]]):
+        staged.append(os.path.join(data, f".dstmp-{i}.parquet"))
+        pq.write_table(pa.table({"doc_id": pa.array(vals, pa.int64())}), staged[-1])
+    schema = StructType([StructField("doc_id", LongType())])
+    S.commit_staged_files(root, staged, schema)
+    assert [f for f in os.listdir(data) if f.startswith(".dstmp-")] == []
+    assert S.read_manifest(root, 1)["summary"]["added_rows"] == 2
+
+
 def test_streaming_source_to_sink_with_evolution(spark, tmp_path):
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
