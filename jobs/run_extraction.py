@@ -2,11 +2,13 @@
 
     spark-submit --py-files dist/pdor_spark.zip jobs/run_extraction.py \
         --pages <pages parquet dir> --patterns <patterns.json> \
-        --out <output dir> [--buckets 64] [--langs en,zh,de] [--relational]
+        --out <output dir> [--buckets 64] [--langs en,zh,de] [--master M] \
+        [--iceberg]
 
-Runs the manifest-resumable extraction job: killed runs resume idempotently
-(re-invoke with the same --out).  Per-partition metrics are written to
-<out>/_metrics alongside the results and the _manifest lineage.
+Runs the manifest-resumable extraction job: one Spark job extracts every
+bucket not yet committed under <out>/_manifest, and killed runs resume
+idempotently (re-invoke with the same --out).  Per-partition metrics are
+written to <out>/_metrics alongside the results and the _manifest lineage.
 """
 
 from __future__ import annotations
@@ -23,12 +25,6 @@ def main(argv=None) -> int:
     parser.add_argument("--buckets", type=int, default=64)
     parser.add_argument("--langs", default="en,zh,de")
     parser.add_argument("--master", default=None)
-    parser.add_argument(
-        "--concurrency",
-        type=int,
-        default=1,
-        help="bucket jobs submitted concurrently from a bounded driver pool",
-    )
     parser.add_argument(
         "--iceberg",
         action="store_true",
@@ -62,7 +58,6 @@ def main(argv=None) -> int:
         lambda df: extract_pages(df, patterns),
         args.out,
         n_buckets=args.buckets,
-        max_concurrency=args.concurrency,
     )
     n = result.count()
     partition_metrics(pages).write.mode("overwrite").parquet(f"{args.out}/_metrics")

@@ -24,6 +24,10 @@ Document lifecycle — a faithful generalization of the reference's
 5. merge fold (ref :270-283, kernel/merge.py) → canonical plaintext render
    (ref pdor/pdor_out.py:298-309, kernel/render.py) = ``extracted_text``.
 
+Any other exception raised while extracting a row makes that row
+status 'failed', error_kind 'KernelError': a bad row never fails the Spark
+task that holds it, so the pipeline and this oracle still agree per url.
+
 The GRIDDOC container (ours, deterministic):
 ``b'GRIDDOC1' + u16 name_len + pattern_name + u32 n_pages +
 (u32 png_len + png_bytes) * n_pages``.
@@ -31,6 +35,7 @@ The GRIDDOC container (ours, deterministic):
 
 from __future__ import annotations
 
+import logging
 import struct
 from typing import Any
 
@@ -41,6 +46,8 @@ from .merge import merge_fold
 from .parse import is_error_result, parse_literal_result
 from .png import decode_png
 from .render import PLAINTEXT_TITLE, format_value, render_plaintext
+
+_log = logging.getLogger(__name__)
 
 GRID_MAGIC = b"GRIDDOC1"
 FULL_PAGE_BOX = [0.0, 100.0, 0.0, 100.0]  # ref pdor/pdor_pattern.py:73 default
@@ -61,7 +68,7 @@ PLAINTEXT_HEADER = PLAINTEXT_TITLE + "\n" + "=" * 50 + "\n\n"
 # | PdorUnparsedError                | manifest 'pending' state — reading     |
 # |                                  |   uncommitted buckets is impossible by |
 # |                                  |   construction (atomic dir rename)     |
-# | PdorParsedError                  | anti-join resume: re-parse is a NO-OP  |
+# | PdorParsedError                  | manifest resume: re-parse is a NO-OP   |
 # |                                  |   by design (documented intent, A21)   |
 # | PdorOutUnsupportedTypeError      | ValueError('unsupported output type')  |
 # |                                  |   in operators/sinks.render_results    |
@@ -71,6 +78,7 @@ PLAINTEXT_HEADER = PLAINTEXT_TITLE + "\n" + "=" * 50 + "\n\n"
 # | PdorInvalidPatternError          | registry InvalidPatternError (build    |
 # |                                  |   time) + ERR_UNKNOWN_PATTERN (row)    |
 # | PdorLLMError                     | ERR_LLM (all sub-image decodes failed) |
+# | (any other kernel exception)     | ERR_KERNEL: the row fails, not its task|
 STATUS_OK = "ok"
 STATUS_EMPTY = "empty"
 STATUS_FAILED = "failed"
@@ -80,6 +88,7 @@ ERR_PAGE_DECODE = "PageDecodeError"     # ~ PdorPDFReadError (no page readable)
 ERR_BAD_CONTAINER = "ImagifyError"      # ~ PdorImagifyError
 ERR_LLM = "LLMError"                    # ~ PdorLLMError (all sub-images failed)
 ERR_UNKNOWN_PATTERN = "InvalidPattern"  # ~ PdorInvalidPatternError
+ERR_KERNEL = "KernelError"              # unexpected exception inside the kernel
 
 
 def parse_grid_container(payload: bytes) -> tuple[str, list[bytes]]:
@@ -154,6 +163,21 @@ def _stringify_fields(d: dict[str, Any]) -> dict[str, str]:
     }
 
 
+def _failed(
+    url: str, error_kind: str, n_subs_failed: int = 0, status: str = STATUS_FAILED
+) -> dict[str, Any]:
+    """Output row of a document that yields no text."""
+    return {
+        "url": url,
+        "status": status,
+        "error_kind": error_kind,
+        "spans": [],
+        "extracted_text": "",
+        "n_cells": 0,
+        "n_subs_failed": n_subs_failed,
+    }
+
+
 def extract_document(
     url: str,
     html: bytes | None,
@@ -169,19 +193,14 @@ def extract_document(
     parameter stays only for callers that pass it positionally.
     """
     if html is None or len(html) == 0:
-        return {
-            "url": url,
-            "status": STATUS_EMPTY,
-            "error_kind": ERR_EMPTY_PAYLOAD,
-            "spans": [],
-            "extracted_text": "",
-            "n_cells": 0,
-            "n_subs_failed": 0,
-        }
-
-    if is_grid_payload(html):
-        return _extract_grid(url, html, patterns)
-    return _extract_html(url, html)
+        return _failed(url, ERR_EMPTY_PAYLOAD, status=STATUS_EMPTY)
+    try:
+        if is_grid_payload(html):
+            return _extract_grid(url, html, patterns)
+        return _extract_html(url, html)
+    except Exception:
+        _log.exception("extraction failed for %s", url)
+        return _failed(url, ERR_KERNEL)
 
 
 def _extract_html(url: str, html: bytes) -> dict[str, Any]:
@@ -190,15 +209,7 @@ def _extract_html(url: str, html: bytes) -> dict[str, Any]:
     # merge fold's single-text collapse (ref pdor/pdor_unit.py:278-279) names
     # it 'sub_0'.
     if not text:
-        return {
-            "url": url,
-            "status": STATUS_FAILED,
-            "error_kind": ERR_LLM,
-            "spans": [],
-            "extracted_text": "",
-            "n_cells": 0,
-            "n_subs_failed": 1,
-        }
+        return _failed(url, ERR_LLM, n_subs_failed=1)
     merged = merge_fold([(0, {"text": text})])
     return {
         "url": url,
@@ -217,26 +228,10 @@ def _extract_grid(
     try:
         pattern_name, page_pngs = parse_grid_container(payload)
     except Exception:
-        return {
-            "url": url,
-            "status": STATUS_FAILED,
-            "error_kind": ERR_BAD_CONTAINER,
-            "spans": [],
-            "extracted_text": "",
-            "n_cells": 0,
-            "n_subs_failed": 0,
-        }
+        return _failed(url, ERR_BAD_CONTAINER)
     pattern = patterns.get(pattern_name)
     if pattern is None:
-        return {
-            "url": url,
-            "status": STATUS_FAILED,
-            "error_kind": ERR_UNKNOWN_PATTERN,
-            "spans": [],
-            "extracted_text": "",
-            "n_cells": 0,
-            "n_subs_failed": 0,
-        }
+        return _failed(url, ERR_UNKNOWN_PATTERN)
     sub_imgs = pattern.get("sub_imgs") or [FULL_PAGE_BOX]
 
     results: list[tuple[int, dict]] = []
@@ -276,15 +271,7 @@ def _extract_grid(
             if page_pngs and n_pages_unreadable == len(page_pngs)
             else ERR_LLM
         )
-        return {
-            "url": url,
-            "status": STATUS_FAILED,
-            "error_kind": kind,
-            "spans": [],
-            "extracted_text": "",
-            "n_cells": 0,
-            "n_subs_failed": n_failed,
-        }
+        return _failed(url, kind, n_subs_failed=n_failed)
 
     merged = merge_fold(results)
     return {

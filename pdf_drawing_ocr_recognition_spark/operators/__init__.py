@@ -5,7 +5,6 @@ from .skew import salted_repartition
 from .manifest import (
     manifest_path,
     read_manifest,
-    pending_inputs,
     run_with_manifest,
 )
 from .metrics import partition_metrics
@@ -16,7 +15,6 @@ __all__ = [
     "salted_repartition",
     "manifest_path",
     "read_manifest",
-    "pending_inputs",
     "run_with_manifest",
     "partition_metrics",
 ]

@@ -167,25 +167,16 @@ def auto_join(
     db = read_snapshot(spark, root_b)
     if strat == "broadcast":
         if decision["build_side"] == "a":
-            out = F.broadcast(da).join(db, key).select(
-                *da.columns, *[c for c in db.columns if c != key]
-            )
+            out = F.broadcast(da).join(db, key)
         else:
             out = da.join(F.broadcast(db), key)
-        return out, decision
-    if strat == "runtime_filter":
+    elif strat == "runtime_filter":
+        # join_pruned output: fact cols then dim's extras
         if decision["build_side"] == "a":
-            facts = join_pruned(
-                spark, root_b, da, key, max_keys=max_filter_keys
-            )
-            # join_pruned output: fact cols then dim's extras; reorder to
-            # the contract (A's columns first)
-            return facts.select(
-                *da.columns, *[c for c in db.columns if c != key]
-            ), decision
-        return join_pruned(
-            spark, root_a, db, key, max_keys=max_filter_keys
-        ).select(
-            *da.columns, *[c for c in db.columns if c != key]
-        ), decision
-    return da.join(db, key), decision
+            out = join_pruned(spark, root_b, da, key, max_keys=max_filter_keys)
+        else:
+            out = join_pruned(spark, root_a, db, key, max_keys=max_filter_keys)
+    else:
+        out = da.join(db, key)
+    # every strategy returns the contract's order, not the USING-join order
+    return out.select(*da.columns, *[c for c in db.columns if c != key]), decision

@@ -5,25 +5,28 @@ is_parsed :323-328) into job-level machinery for 10^12-document runs:
 
 - work is partitioned into **buckets** by ``pmod(xxhash64(url), n_buckets)``
   (content-addressed, independent of file layout, stable across runs);
-- each completed bucket commits a manifest row (bucket id, row count, status,
-  metrics) AND its result parquet, written atomically (temp dir + rename);
-- resume = read committed manifests, **left-anti join** the input's buckets
-  against them, and process only the remainder — a re-run after a kill
-  re-does at most the in-flight bucket, and re-doing it is harmless because
-  the kernel is deterministic and the commit is atomic.
+- each completed bucket commits its result dir ``bucket=K/`` (atomic rename)
+  AND then a manifest row ``_manifest/bucket-KKKKK.json`` (bucket, n_rows,
+  n_failed, wall_s, committed_ts; fsync + rename).  A bucket with no rows
+  commits a row with ``n_rows`` 0 and no result dir;
+- resume = ``range(n_buckets)`` minus the committed manifest files, listed on
+  the driver with no Spark job.  All pending buckets are extracted by ONE
+  write job, so a run scans its input once whatever ``n_buckets`` is, and a
+  fully committed output resumes with no extraction and no scan.
 
-The manifest is itself a small parquet table next to the results, so lineage
+The manifest is itself a small JSON table next to the results, so lineage
 (which bucket produced which rows, at what throughput) is queryable with the
-same engine.
+same engine (``read_manifest``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -35,35 +38,21 @@ def manifest_path(output_dir: str) -> str:
     return os.path.join(output_dir, "_manifest")
 
 
+def _manifest_files(output_dir: str) -> list[str]:
+    path = manifest_path(output_dir)
+    if not os.path.isdir(path):
+        return []
+    return sorted(f for f in os.listdir(path) if f.endswith(".json"))
+
+
 def read_manifest(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed-bucket manifest (empty frame when no run has committed yet)."""
-    path = manifest_path(output_dir)
     schema = "bucket INT, n_rows LONG, n_failed LONG, wall_s DOUBLE, committed_ts STRING"
-    files = (
-        [f for f in os.listdir(path) if f.endswith(".json")]
-        if os.path.isdir(path)
-        else []
-    )
-    if not files:
-        return spark.createDataFrame([], schema)
     rows = []
-    for f in sorted(files):
-        with open(os.path.join(path, f), "r", encoding="utf-8") as fh:
+    for f in _manifest_files(output_dir):
+        with open(os.path.join(manifest_path(output_dir), f), "r", encoding="utf-8") as fh:
             rows.append(json.load(fh))
     return spark.createDataFrame(rows, schema)
-
-
-def pending_inputs(
-    pages: DataFrame, manifest: DataFrame, n_buckets: int
-) -> DataFrame:
-    """Inputs minus completed buckets — the resume delta (left-anti join).
-
-    The manifest side is tiny (≤ n_buckets rows) so Catalyst broadcasts it;
-    the anti join therefore adds no shuffle to the big side.
-    """
-    with_bucket = pages.withColumn("bucket", bucket_of(F.col("url"), n_buckets))
-    done = manifest.select("bucket")
-    return with_bucket.join(F.broadcast(done), "bucket", "left_anti")
 
 
 def _commit_bucket(output_dir: str, bucket: int, n_rows: int, n_failed: int, wall_s: float) -> None:
@@ -86,77 +75,60 @@ def _commit_bucket(output_dir: str, bucket: int, n_rows: int, n_failed: int, wal
     os.replace(tmp, final)
 
 
-def _process_bucket(todo: DataFrame, bucket: int, extract_fn, output_dir: str) -> None:
-    """One restartable unit of work: filter → extract → write → commit.
-
-    Row/failure stats are collected DURING the write via ``Observation``
-    (accumulator-backed query metrics), so the bucket's data is scanned
-    exactly once — no post-write re-read of the parquet.
-    """
-    from pyspark.sql import Observation
-
-    t0 = time.time()
-    part = todo.filter(F.col("bucket") == bucket).drop("bucket")
-    result = extract_fn(part)
-    obs = Observation(f"bucket_{bucket}")
-    observed = result.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("status") == "failed").cast("long")).alias("nf"),
-    )
-    tmp_dir = os.path.join(output_dir, f".bucket={bucket}.tmp")
-    final_dir = os.path.join(output_dir, f"bucket={bucket}")
-    observed.write.mode("overwrite").parquet(tmp_dir)
-    stats = obs.get
-    if os.path.isdir(final_dir):
-        import shutil
-
-        shutil.rmtree(final_dir)
-    os.replace(tmp_dir, final_dir)
-    _commit_bucket(
-        output_dir, bucket, stats["n"], stats["nf"] or 0, time.time() - t0
-    )
-
-
 def run_with_manifest(
     spark: SparkSession,
     pages: DataFrame,
     extract_fn,
     output_dir: str,
     n_buckets: int = 8,
-    max_concurrency: int = 1,
 ) -> DataFrame:
-    """Run extraction bucket-by-bucket with manifest commits; returns results.
+    """Extract every pending bucket in one write job, then commit them; returns results.
 
-    Each bucket is one restartable unit of work: filter → extract → write
-    parquet under ``bucket=K/`` → commit manifest row.  A killed run leaves
-    committed buckets untouched; the next invocation processes only the
-    left-anti remainder.  Bucket results land via directory rename so readers
-    never observe half-written buckets.
+    The job writes ``extract_fn`` over the pending buckets' pages with
+    ``partitionBy("bucket")`` into ``<output_dir>/.staging.tmp``; an
+    ``Observation`` on the write counts rows and failures per bucket, so
+    there is no extra action.  The driver then renames each staged
+    ``bucket=K/`` into place and commits its manifest row, bucket by bucket.
+    Readers therefore never see a half-written bucket.  Every bucket of the
+    run records the same ``wall_s``: the wall time of the job that produced
+    it.  Empty buckets are committed too (``n_rows`` 0, no result dir), so a
+    resume does not look for them again.
 
-    ``max_concurrency > 1`` submits bucket jobs from a bounded driver thread
-    pool — Spark's scheduler interleaves their stages across the executors,
-    so stragglers in one bucket no longer serialize the whole run (the fix
-    for the driver-side sequential-loop scalability note).  Each bucket's
-    write + manifest commit stays independent and atomic, so kill/resume
-    semantics are unchanged at any concurrency.
+    Restart unit: a kill during the write redoes the whole pending set; a
+    kill inside the commit loop redoes only the buckets not yet committed.
+    Output is exactly-once in both cases, because the kernel is
+    deterministic, a stale ``bucket=K/`` or staging dir is removed before it
+    is replaced, and a bucket counts as done only once its row is committed.
     """
-    manifest = read_manifest(spark, output_dir)
-    todo = pending_inputs(pages, manifest, n_buckets)
-    buckets = sorted(r["bucket"] for r in todo.select("bucket").distinct().collect())
-    if max_concurrency <= 1:
-        for bucket in buckets:
-            _process_bucket(todo, bucket, extract_fn, output_dir)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            futures = [
-                pool.submit(_process_bucket, todo, b, extract_fn, output_dir)
-                for b in buckets
-            ]
-            for f in futures:
-                f.result()  # surface the first failure, after all complete
+    done = {int(f[len("bucket-"):-len(".json")]) for f in _manifest_files(output_dir)}
+    pending = [b for b in range(n_buckets) if b not in done]
+    if pending:
+        _extract_pending(pages, extract_fn, output_dir, n_buckets, pending)
     return spark.read.option("basePath", output_dir).parquet(
         os.path.join(output_dir, "bucket=*")
     )
+
+
+def _extract_pending(pages, extract_fn, output_dir, n_buckets, pending) -> None:
+    t0 = time.time()
+    bucket = bucket_of(F.col("url"), n_buckets)
+    result = extract_fn(pages.filter(bucket.isin(pending))).withColumn("bucket", bucket)
+    obs = Observation("manifest")
+    failed = (F.col("status") == "failed").cast("long")
+    stats = []
+    for b in pending:
+        in_b = (F.col("bucket") == b).cast("long")
+        stats += [F.sum(in_b).alias(f"n{b}"), F.sum(in_b * failed).alias(f"nf{b}")]
+    staging = os.path.join(output_dir, ".staging.tmp")
+    shutil.rmtree(staging, ignore_errors=True)  # left by a run killed mid-write
+    result.observe(obs, *stats).write.partitionBy("bucket").parquet(staging)
+    counts = obs.get
+    wall_s = time.time() - t0
+    for b in pending:
+        final_dir = os.path.join(output_dir, f"bucket={b}")
+        shutil.rmtree(final_dir, ignore_errors=True)
+        staged = os.path.join(staging, f"bucket={b}")
+        if os.path.isdir(staged):
+            os.replace(staged, final_dir)
+        _commit_bucket(output_dir, b, counts[f"n{b}"] or 0, counts[f"nf{b}"] or 0, wall_s)
+    shutil.rmtree(staging)

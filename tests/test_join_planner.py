@@ -105,3 +105,23 @@ def test_mismatched_buckets_do_not_spj(spark, tmp_path):
     )
     d = choose_join_strategy(ra, rb, "doc_id")
     assert d["strategy"] != "spj"
+
+
+@pytest.mark.parametrize(
+    "strategy, kw",
+    [
+        ("broadcast", {}),
+        ("shuffle", {"broadcast_bytes": 1, "max_filter_keys": 10}),
+    ],
+)
+def test_column_order_is_a_then_b_when_key_not_first(spark, tmp_path, strategy, kw):
+    ra, rb = str(tmp_path / "a"), str(tmp_path / "b")
+    S.append_snapshot(_facts(spark).select("lang", "n_chars", "doc_id"), ra)
+    S.append_snapshot(_dim(spark, range(0, 200)), rb)
+    out, decision = auto_join(spark, ra, rb, "doc_id", **kw)
+    assert decision["strategy"] == strategy, decision["reason"]
+    assert decision["build_side"] in ("b", None)
+    assert out.columns == ["lang", "n_chars", "doc_id", "label"]
+    da, db = S.read_snapshot(spark, ra), S.read_snapshot(spark, rb)
+    want = da.join(db, "doc_id").select("lang", "n_chars", "doc_id", "label")
+    assert sorted(out.collect()) == sorted(want.collect())

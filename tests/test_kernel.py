@@ -322,6 +322,23 @@ class TestExtractDocument:
         assert r["n_subs_failed"] == 1
         assert len(calls) == 1
 
+    def test_kernel_exception_is_a_failed_row(self):
+        # a malformed pattern (sub_imgs not a list) raises inside the grid
+        # path; the row comes back failed instead of failing its caller
+        from pdf_drawing_ocr_recognition_spark.fixtures.gen_pages import (
+            PATTERNS,
+            build_griddoc,
+            build_page_image,
+        )
+        from pdf_drawing_ocr_recognition_spark.kernel import extract_document
+
+        img = build_page_image(PATTERNS["fullpage"], [{"text": "x"}])
+        doc = build_griddoc("bad", [img])
+        patterns = {**PATTERNS, "bad": {"name": "bad", "sub_imgs": 5}}
+        r = extract_document("u", doc, "en", patterns)
+        assert r["status"] == "failed" and r["error_kind"] == "KernelError"
+        assert r["spans"] == [] and r["extracted_text"] == ""
+
     def test_failed_sub_does_not_abort_rest(self):
         # A18 documented intent (NOT the reference's echo-gated break bug):
         # one failing sub-image leaves the other's result intact

@@ -76,8 +76,15 @@ class TestManifestResume:
 
         full = run_with_manifest(spark, pages, extract_fn, out_dir, n_buckets=4)
         n_first = full.count()
-        assert len(calls) == 4
-        assert read_manifest(spark, out_dir).count() == 4
+        assert len(calls) == 1  # one extraction job for all four buckets
+        m = {r["bucket"]: r for r in read_manifest(spark, out_dir).collect()}
+        assert len(m) == 4
+        # Observation-collected stats agree with the written data
+        for bucket, row in m.items():
+            written = spark.read.parquet(f"{out_dir}/bucket={bucket}")
+            assert row["n_rows"] == written.count()
+            assert row["n_failed"] == written.filter(F.col("status") == "failed").count()
+        assert sum(r["n_failed"] for r in m.values()) > 0
 
         # second run: everything committed → no extraction work at all
         calls.clear()
@@ -117,9 +124,52 @@ class TestManifestResume:
         assert len(calls) == 1  # only the lost bucket re-ran
         assert got == want
 
-    def test_concurrent_buckets_match_sequential(self, spark, tmp_path):
-        """max_concurrency=4: same results, same manifest, same resume — the
-        pool only changes WHEN jobs run, never what they write."""
+    def test_kill_in_commit_loop_resumes_exactly_once(self, spark, tmp_path, monkeypatch):
+        """A kill after two bucket commits leaves staged data behind; the
+        resume redoes only the uncommitted buckets and cleans the staging."""
+        from pdf_drawing_ocr_recognition_spark.operators import manifest
+        from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
+
+        pages = self._pages(spark, tmp_path)
+        fn = lambda df: extract_pages(df, PATTERNS)
+        want = {
+            r["url"]: r["extracted_text"]
+            for r in manifest.run_with_manifest(
+                spark, pages, fn, str(tmp_path / "clean"), n_buckets=4
+            ).collect()
+        }
+
+        out_dir = str(tmp_path / "killed")
+        commit = manifest._commit_bucket
+        n_commits = []
+
+        def dying_commit(*args):
+            n_commits.append(1)
+            if len(n_commits) == 3:
+                raise RuntimeError("killed")
+            commit(*args)
+
+        monkeypatch.setattr(manifest, "_commit_bucket", dying_commit)
+        with pytest.raises(RuntimeError, match="killed"):
+            manifest.run_with_manifest(spark, pages, fn, out_dir, n_buckets=4)
+        monkeypatch.setattr(manifest, "_commit_bucket", commit)
+        mdir = manifest.manifest_path(out_dir)
+        kept = {f: os.stat(os.path.join(mdir, f)).st_mtime_ns for f in os.listdir(mdir)}
+        assert len(kept) == 2
+        assert os.path.isdir(os.path.join(out_dir, ".staging.tmp"))
+
+        resumed = manifest.run_with_manifest(spark, pages, fn, out_dir, n_buckets=4)
+        rows = resumed.collect()
+        assert len(rows) == len(want)
+        assert {r["url"]: r["extracted_text"] for r in rows} == want
+        assert manifest.read_manifest(spark, out_dir).count() == 4
+        assert not os.path.exists(os.path.join(out_dir, ".staging.tmp"))
+        # the two committed buckets were not redone
+        assert all(os.stat(os.path.join(mdir, f)).st_mtime_ns == t for f, t in kept.items())
+
+    def test_one_job_commits_every_bucket_even_empty_ones(self, spark, tmp_path):
+        """64 buckets over 120 rows: some buckets hold no row, and they are
+        committed too, so the resume extracts nothing."""
         from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
         from pdf_drawing_ocr_recognition_spark.operators.manifest import (
             read_manifest,
@@ -127,34 +177,49 @@ class TestManifestResume:
         )
 
         pages = self._pages(spark, tmp_path)
-        fn = lambda df: extract_pages(df, PATTERNS)
-        seq_dir = str(tmp_path / "seq")
-        con_dir = str(tmp_path / "con")
-        seq = run_with_manifest(spark, pages, fn, seq_dir, n_buckets=4)
-        con = run_with_manifest(
-            spark, pages, fn, con_dir, n_buckets=4, max_concurrency=4
-        )
-        a = {r["url"]: r["extracted_text"] for r in seq.collect()}
-        b = {r["url"]: r["extracted_text"] for r in con.collect()}
-        assert a == b
-        m = {r["bucket"]: r for r in read_manifest(spark, con_dir).collect()}
-        assert len(m) == 4
-        # Observation-collected stats agree with the written data
-        for bucket, row in m.items():
-            n = spark.read.parquet(f"{con_dir}/bucket={bucket}").count()
-            assert row["n_rows"] == n
-
-        # fully-committed concurrent dir resumes to a no-op
+        out_dir = str(tmp_path / "out64")
         calls = []
 
         def counting_fn(df):
             calls.append(1)
-            return fn(df)
+            return extract_pages(df, PATTERNS)
 
-        run_with_manifest(
-            spark, pages, counting_fn, con_dir, n_buckets=4, max_concurrency=4
-        ).count()
+        n = run_with_manifest(spark, pages, counting_fn, out_dir, n_buckets=64).count()
+        assert len(calls) == 1
+        m = read_manifest(spark, out_dir).collect()
+        assert sorted(r["bucket"] for r in m) == list(range(64))
+        assert sum(r["n_rows"] for r in m) == n
+        assert any(r["n_rows"] == 0 for r in m)
+
+        calls.clear()
+        assert run_with_manifest(spark, pages, counting_fn, out_dir, n_buckets=64).count() == n
         assert len(calls) == 0
+
+
+class TestBadRow:
+    def test_kernel_exception_fails_the_row_not_the_task(self, spark):
+        from pdf_drawing_ocr_recognition_spark.fixtures.gen_pages import (
+            build_griddoc,
+            build_page_image,
+        )
+        from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
+
+        bad = build_griddoc(
+            "bad", [build_page_image(PATTERNS["fullpage"], [{"text": "x"}])]
+        )
+        rows = [(url, html, lang) for url, _ts, html, _text, lang in gen_rows(40)]
+        rows.append(("bad://row", bad, "en"))
+        patterns = {**PATTERNS, "bad": {"name": "bad", "sub_imgs": 5}}
+        df = spark.createDataFrame(rows, "url string, html binary, lang string")
+        got = {r["url"]: r for r in extract_pages(df, patterns).collect()}
+        assert len(got) == len(rows)
+        assert got["bad://row"]["status"] == "failed"
+        assert got["bad://row"]["error_kind"] == "KernelError"
+        for url, html, lang in rows[:-1]:
+            want = extract_document(url, html, lang, patterns)
+            assert got[url]["status"] == want["status"], url
+            assert got[url]["extracted_text"] == want["extracted_text"], url
+        assert sum(r["status"] == "ok" for r in got.values()) > 20
 
 
 class TestSkew:
