@@ -5,7 +5,7 @@ the whole engine exists for:
       → crawl hygiene (optional): domain-blocklist drop (T56) and robots.txt
         REP filtering (T63) on URLs — before any content is touched
       → snapshot diff vs yesterday (CDC, T55): only added/changed urls go on
-      → extraction kernel over the delta only (A-series pipeline)
+      → extraction kernel over the delta only, run once per day (A-series pipeline)
       → content hygiene (optional): the standard webtext quality funnel
         (T62 rules) on extracted text
       → incremental dedup probe against the persisted index (T44)
@@ -15,16 +15,17 @@ the whole engine exists for:
 Exactly-once resume (the M5 manifest pattern at job granularity): each day
 keeps a journal at <state>/journal/day=<label>.json recording which stages
 committed (survivors landed → index folded → snapshot advanced → complete).
-A killed job resumes from the first unjournaled stage — in particular, a
-kill after the index fold but before the snapshot advance can NEVER replay
-extraction against an index that already contains today's documents (which
-would dedup the whole day away and overwrite the landed output with an
-empty frame); the resume reads the landed survivors back instead of
-recomputing them.  A fully completed day reruns as a no-op.  The one
-remaining at-least-once window — the process dying between a completed
-index fold and its journal write — re-appends today's digests to the index,
-which is harmless by construction (the index feeds semi/anti-join probes;
-duplicate rows change no result).
+The day's summary is journaled when the survivors land.  A kill before
+that restarts the day from CDC; a killed job resumes from the first
+unjournaled stage — in particular, a kill after the index fold but before
+the snapshot advance can NEVER replay extraction against an index that
+already contains today's documents (which would dedup the whole day away
+and overwrite the landed output with an empty frame); the resume reads the
+landed survivors back instead of recomputing them.  A fully completed day
+reruns as a no-op.  The one remaining at-least-once window — the process
+dying between a completed index fold and its journal write — re-appends
+today's digests to the index, which is harmless by construction (the index
+feeds semi/anti-join probes; duplicate rows change no result).
 
     spark-submit --py-files dist/pdor_spark.zip jobs/run_daily_ingest.py \
         --warc <segment dir> --patterns <registry.json> \
@@ -119,6 +120,7 @@ def main(argv=None, spark=None) -> int:
     )
     args = parser.parse_args(argv)
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from pdf_drawing_ocr_recognition_spark.operators.cdc import snapshot_diff
@@ -149,7 +151,6 @@ def main(argv=None, spark=None) -> int:
         if own_session:
             spark.stop()
         return 0
-    resume = bool(journal.get("survivors_done"))
     out_path = f"{args.out}/day={args.day}"
 
     snap_mode = bool(args.snapshots)
@@ -180,11 +181,7 @@ def main(argv=None, spark=None) -> int:
             )
         snap_from, snap_to = journal["snap_from"], journal["snap_to"]
         if snap_from == snap_to:
-            from pyspark.sql import functions as _F
-
-            pages = read_snapshot(spark, args.snapshots, snap_to).where(
-                _F.lit(False)
-            )
+            pages = read_snapshot(spark, args.snapshots, snap_to).where(F.lit(False))
         elif snap_from == 0:
             pages = read_snapshot(spark, args.snapshots, snap_to)
         else:
@@ -194,9 +191,7 @@ def main(argv=None, spark=None) -> int:
                 spark, args.snapshots, snap_from, snap_to
             )
         if langs:
-            from pyspark.sql import functions as _F
-
-            pages = pages.filter(_F.col("lang").isin(*langs))
+            pages = pages.filter(F.col("lang").isin(*langs))
     else:
         pages = read_pages(spark, args.pages, langs=langs or None)
 
@@ -256,12 +251,11 @@ def main(argv=None, spark=None) -> int:
     snap_path = f"{args.state}/snapshot"
     index_path = f"{args.state}/index"
 
-    if not resume:
+    if not journal.get("survivors_done"):
         if snap_mode:
             # the table's commit log IS the delta: no digest CDC needed
             first_day = journal["snap_from"] == 0
             delta_pages = pages
-            n_today = delta_pages.count()
         else:
             try:
                 prev = spark.read.parquet(snap_path)
@@ -278,8 +272,13 @@ def main(argv=None, spark=None) -> int:
             n_today = today.count()
             delta_pages = pages.join(delta_urls, "url", "left_semi")
 
-        # --- extraction over the delta only ---------------------------------
-        docs = extract_pages(delta_pages, patterns).filter(F.col("status") == "ok")
+        # --- extraction over the delta only, once: the count runs the kernel
+        # (one row per page); every later read hits the cache ---------------
+        extracted = extract_pages(delta_pages, patterns).persist()
+        n_delta = extracted.count()
+        if snap_mode:
+            n_today = n_delta
+        docs = extracted.filter(F.col("status") == "ok")
 
         # --- content hygiene: the standard webtext funnel on extracted text -
         n_quality_dropped = 0
@@ -307,39 +306,36 @@ def main(argv=None, spark=None) -> int:
         else:
             survivors = docs
 
+        landed = Observation("survivors")
+        survivors = survivors.observe(landed, F.count("*").alias("n"))
         survivors.write.mode("overwrite").parquet(out_path)
-        n_delta = delta_pages.count()
+        extracted.unpersist()
         journal = _advance_journal(
             args.state,
             args.day,
             survivors_done=True,
             have_index=have_index,
-            first_day=first_day,
-            n_today=n_today,
-            n_delta=n_delta,
-            n_blocked=n_blocked,
-            n_robots=n_robots,
-            n_quality_dropped=n_quality_dropped,
+            summary={
+                "day": args.day,
+                "first_day": first_day,
+                "pages_today": n_today,
+                "delta_pages": n_delta,
+                "survivors": landed.get["n"],
+                "blocked_urls": n_blocked,
+                "robots_disallowed": n_robots,
+                "quality_dropped": n_quality_dropped,
+                "out": out_path,
+            },
         )
-    else:
-        # survivors already landed: NEVER recompute them — the index may
-        # already contain today's digests, and a replayed dedup probe would
-        # erase the whole day.  Read the landed output back instead.
-        have_index = journal["have_index"]
-        first_day = journal["first_day"]
-        n_today = journal["n_today"]
-        n_delta = journal["n_delta"]
-        n_blocked = journal["n_blocked"]
-        n_robots = journal["n_robots"]
-        n_quality_dropped = journal["n_quality_dropped"]
-
+    # once the survivors landed, NEVER recompute them — the index may
+    # already contain today's digests, and a replayed dedup probe would
+    # erase the whole day.  Read the landed output back instead.
     kept = spark.read.parquet(out_path)
-    n_kept = kept.count()
     _fault_injection_point("after_survivors")
 
     # --- advance state AFTER the survivors are materialized -----------------
     if not journal.get("index_done"):
-        if have_index:
+        if journal["have_index"]:
             append_to_dedup_index(kept, index_path, "extracted_text", "url")
         else:
             write_dedup_index(kept, index_path, "extracted_text", "url")
@@ -363,19 +359,8 @@ def main(argv=None, spark=None) -> int:
             today.write.mode("overwrite").parquet(snap_path)
         journal = _advance_journal(args.state, args.day, snapshot_done=True)
 
-    summary = {
-        "day": args.day,
-        "first_day": first_day,
-        "pages_today": n_today,
-        "delta_pages": n_delta,
-        "survivors": n_kept,
-        "blocked_urls": n_blocked,
-        "robots_disallowed": n_robots,
-        "quality_dropped": n_quality_dropped,
-        "out": out_path,
-    }
-    _advance_journal(args.state, args.day, complete=True, summary=summary)
-    print(json.dumps(summary))
+    _advance_journal(args.state, args.day, complete=True)
+    print(json.dumps(journal["summary"]))
     if own_session:
         spark.stop()
     return 0

@@ -43,7 +43,7 @@ def build_session(
         # Catalyst hands filters to the Python DataSource planner
         # (sources/spark_datasource.py pushFilters → manifest pruning)
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # metastore artifacts (bucketed saveAsTable) stay out of the repo tree
@@ -62,6 +62,12 @@ def _resolve_master(master: str | None) -> str:
     from ``SPARK_GRAFT_CPUS`` or the CPUs this process may run on."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     return master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
+
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the host's memory within 1g-8g."""
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(max(half_gib, 1), 8)}g"
 
 
 def _local_n(master: str) -> int:

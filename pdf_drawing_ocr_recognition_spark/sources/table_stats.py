@@ -7,8 +7,8 @@ scanning data.  The analogue: :func:`analyze_table` computes per-column
 aggregation pass and lands them as a metadata-only ``compute-stats``
 commit whose summary carries the stats keyed to the snapshot they
 describe; :func:`table_stats` reads them back from manifest JSON alone
-— with a staleness report (rows added since the analyzed snapshot), so
-a planner knows when to trust them.
+— with a staleness report (rows added and commits since the analyzed
+snapshot), so a planner knows when to trust them.
 
 Scale posture: the pass is a single map-side-combinable aggregation —
 no joins, no windows.  NDV defaults to Spark's native HyperLogLog++
@@ -118,8 +118,9 @@ def table_stats(root: str, snapshot_id: int | None = None) -> dict:
     """The newest column stats visible from *snapshot_id* (default
     current), from manifest JSON alone, with staleness: ``{"columns":
     {col: {n_nulls, ndv, min, max}}, "analyzed_snapshot", "analyzed_rows",
-    "rows_added_since", "ndv_mode"}``.  Raises if the table was never
-    analyzed — a planner must never mistake "no stats" for "empty"."""
+    "rows_added_since", "commits_since" (non-stats commits: tells "only
+    deletions" from "unchanged"), "ndv_mode"}``.  Raises if the table was
+    never analyzed — a planner must never mistake "no stats" for "empty"."""
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(root)
     if sid is None:
         raise ValueError(f"table at {root} has no committed snapshot")
@@ -135,15 +136,17 @@ def table_stats(root: str, snapshot_id: int | None = None) -> dict:
     if best is None:
         raise ValueError(f"table at {root} has never been ANALYZEd")
     _stat_sid, props = best
-    added = 0
+    added = commits = 0
     for man in snapshot_log(root):
         if props["analyzed_snapshot"] < man["snapshot_id"] <= sid:
             added += int(man["summary"].get("added_rows", 0))
+            commits += man["operation"] != "compute-stats"
     return {
         "columns": props["table_stats"],
         "analyzed_snapshot": int(props["analyzed_snapshot"]),
         "analyzed_rows": int(props["analyzed_rows"]),
         "rows_added_since": added,
+        "commits_since": commits,
         "ndv_mode": props.get("ndv_mode", "unknown"),
         "skipped": props.get("stats_skipped_cols", []),
     }

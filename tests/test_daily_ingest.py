@@ -46,7 +46,61 @@ def _run(spark, tmp_path, capsys, day: str, records: list[dict], extra=()):
     return summary
 
 
+def _assert_uninterrupted_summary(spark, tmp_path, capsys, resumed, records):
+    """A resumed day reports the summary of the same day run without a kill
+    on fresh state (the output path aside)."""
+    fresh = tmp_path / "uninterrupted"
+    fresh.mkdir()
+    clean = _run(spark, fresh, capsys, resumed["day"], records)
+    assert resumed == {**clean, "out": resumed["out"]}
+
+
 class TestDailyIngest:
+    def test_each_delta_row_is_extracted_once(
+        self, spark, tmp_path, capsys, monkeypatch
+    ):
+        """The funnel counts, the dedup probe's branches and the survivors
+        write all read ONE extraction of the delta: the kernel sees each
+        delta row exactly once per day."""
+        from pdf_drawing_ocr_recognition_spark.operators import extract
+
+        log_dir = str(tmp_path / "batches")
+        real = extract.extract_pages
+
+        def logged(pages, patterns):
+            out = real(pages, patterns)
+
+            def log(batches):
+                import os
+                import uuid
+
+                for pdf in batches:
+                    with open(os.path.join(log_dir, uuid.uuid4().hex), "w") as f:
+                        f.write(str(len(pdf)))
+                    yield pdf
+
+            return out.mapInPandas(log, out.schema)
+
+        def rows_seen():
+            import os
+
+            return sum(
+                int(open(os.path.join(log_dir, n)).read())
+                for n in os.listdir(log_dir)
+            )
+
+        monkeypatch.setattr(extract, "extract_pages", logged)
+        day1 = [_page(i, 1200 + i) for i in range(4)]
+        (tmp_path / "batches").mkdir()
+        _run(spark, tmp_path, capsys, "d1", day1)
+        assert rows_seen() == 4
+        # day 2: the day-1 pages unchanged plus two new ones
+        (tmp_path / "batches").rename(tmp_path / "batches_d1")
+        (tmp_path / "batches").mkdir()
+        s2 = _run(spark, tmp_path, capsys, "d2", day1 + [_page(i, 1300 + i) for i in (4, 5)])
+        assert s2["delta_pages"] == 2
+        assert rows_seen() == s2["delta_pages"]
+
     def test_two_day_ingest_processes_only_the_delta(
         self, spark, tmp_path, capsys
     ):
@@ -131,6 +185,7 @@ class TestDailyIngest:
         monkeypatch.setattr(job, "_fault_injection_point", lambda stage: None)
         s = _run(spark, tmp_path, capsys, "d1", day1)
         assert s["survivors"] == 4  # the landed day is preserved, not wiped
+        _assert_uninterrupted_summary(spark, tmp_path, capsys, s, day1)
         assert spark.read.parquet(s["out"]).count() == 4
         snap = spark.read.parquet(str(tmp_path / "state" / "snapshot"))
         assert snap.count() == 4  # snapshot advanced on resume
@@ -191,12 +246,14 @@ class TestDailyIngest:
 
         s1 = run("d1")
         assert s1["first_day"] and s1["delta_pages"] == 4 == s1["survivors"]
+        assert s1["pages_today"] == s1["delta_pages"]
 
         # two new fetches appended to the table: day 2 reads ONLY those
         append_snapshot(page_rows(4, 6), root)
         s2 = run("d2")
         assert not s2["first_day"]
         assert s2["delta_pages"] == 2 == s2["survivors"]
+        assert s2["pages_today"] == s2["delta_pages"]
         urls2 = {
             r["url"]
             for r in spark.read.parquet(s2["out"]).select("url").collect()
@@ -236,6 +293,7 @@ class TestDailyIngest:
         monkeypatch.setattr(job, "_fault_injection_point", lambda stage: None)
         s = _run(spark, tmp_path, capsys, "d1", day1)
         assert s["survivors"] == 3
+        _assert_uninterrupted_summary(spark, tmp_path, capsys, s, day1)
         idx = spark.read.parquet(str(tmp_path / "state" / "index" / "digests"))
         assert idx.count() == 3
 

@@ -42,6 +42,7 @@ def test_exact_stats_and_metadata_only_commit(spark, root):
     assert st["columns"]["lang"]["ndv"] == 7
     assert st["columns"]["bucket"]["ndv"] == 50
     assert st["rows_added_since"] == 0
+    assert st["commits_since"] == 0
     # the table still reads normally through the stats commit
     assert S.read_snapshot(spark, root).count() == 500
 
@@ -67,6 +68,16 @@ def test_staleness_and_time_scoping(spark, root):
     # a reader pinned before the stats commit sees no stats
     with pytest.raises(ValueError, match="never been ANALYZEd"):
         table_stats(root, snapshot_id=1)
+
+
+def test_delete_after_analyze_counts_as_a_commit(spark, root):
+    S.append_snapshot(_docs(spark), root)
+    analyze_table(spark, root, exact=True)
+    S.delete_from(spark, root, [("doc_id", "<", 100)])
+    st = table_stats(root)
+    # no rows added, but the stats describe a table that has since changed
+    assert st["rows_added_since"] == 0
+    assert st["commits_since"] == 1
 
 
 def test_approx_mode_and_validation(spark, root):
