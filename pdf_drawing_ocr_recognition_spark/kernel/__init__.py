@@ -21,7 +21,7 @@ from .render import (
 )
 from .html_extract import extract_main_text, block_features
 from .grid import decode_grid_payload, detect_rule_lines, assemble_cells
-from .page import decode_page, extract_document, PLAINTEXT_HEADER
+from .page import extract_document, PLAINTEXT_HEADER
 
 __all__ = [
     "has_balanced_braces",
@@ -42,7 +42,6 @@ __all__ = [
     "decode_grid_payload",
     "detect_rule_lines",
     "assemble_cells",
-    "decode_page",
     "extract_document",
     "PLAINTEXT_HEADER",
 ]

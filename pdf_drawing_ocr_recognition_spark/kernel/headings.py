@@ -25,12 +25,10 @@ structure-mining generalization, same tier as kernel/meta.py.
 from __future__ import annotations
 
 import html as _htmllib
-import re
 
-from .html_extract import _DROP_TAGS, iter_tokens
+from .html_extract import _DROP_TAGS, collapse_ws, iter_tokens
 
 _HEADING_TAGS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
-_WS_RE = re.compile(r"\s+")
 
 
 def extract_headings(html: str) -> list[dict]:
@@ -47,7 +45,7 @@ def extract_headings(html: str) -> list[dict]:
     def flush() -> None:
         nonlocal level
         if level is not None:
-            text = _WS_RE.sub(" ", "".join(parts)).strip()
+            text = collapse_ws("".join(parts))
             out.append({"idx": len(out), "level": level, "text": text})
             level = None
 
@@ -102,7 +100,7 @@ def extract_sections(html: str) -> list[dict]:
     drop = 0
 
     def norm(parts: list[str]) -> str:
-        return _WS_RE.sub(" ", "".join(parts)).strip()
+        return collapse_ws("".join(parts))
 
     def close_section() -> None:
         nonlocal title, b_parts

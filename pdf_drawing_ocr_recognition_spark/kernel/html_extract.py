@@ -5,8 +5,10 @@ Generalizes the reference's fixed-layout extraction to web pages, per
 link-density / text-density features + Boilerpipe/trafilatura-class threshold
 rules (Kohlschütter et al., WSDM'10; Barbaresi, ACL'21 demo — PAPERS.md).
 
-Deterministic pure-Python implementation on the stdlib ``html.parser`` — no
-external parsing libs (none are installed).  The classifier:
+Deterministic pure-Python implementation on its own linear-time tokenizer,
+``iter_tokens`` (one compiled pattern plus ``str.find`` jumps), which the
+sister HTML kernels share — no external parsing libs (none are installed).
+The classifier:
 
 - split the document into blocks at block-level element boundaries
   (p, div, li, td, h1-h6, section, article, br pairs, ...);
@@ -27,9 +29,8 @@ hard boilerplate (trafilatura-style structural pruning).
 
 from __future__ import annotations
 
-import math
 import re
-from dataclasses import dataclass, field
+from html import unescape
 
 _BLOCK_TAGS = {
     "p", "div", "li", "ul", "ol", "td", "th", "tr", "table",
@@ -38,48 +39,35 @@ _BLOCK_TAGS = {
 }
 _DROP_TAGS = {"script", "style", "noscript", "template", "svg", "iframe"}
 _BOILER_TAGS = {"nav", "header", "footer", "aside"}
-_WS_RE = re.compile(r"\s+")
 _WRAP_COLS = 80
 
 
-@dataclass
-class Block:
-    """One text block with link/text-density features."""
-
-    text_parts: list[str] = field(default_factory=list)
-    anchor_chars: int = 0
-    in_boiler: bool = False
-
-    def finish(self) -> dict | None:
-        text = _WS_RE.sub(" ", "".join(self.text_parts)).strip()
-        if not text:
-            return None
-        n_chars = len(text)
-        words = text.split(" ")
-        n_words = len(words)
-        n_lines = max(1, math.ceil(n_chars / _WRAP_COLS))
-        return {
-            "text": text,
-            "n_chars": n_chars,
-            "n_words": n_words,
-            "link_density": self.anchor_chars / n_chars if n_chars else 0.0,
-            "text_density": n_words / n_lines,
-            "in_boiler": self.in_boiler,
-        }
+def collapse_ws(s: str) -> str:
+    r"""Runs of whitespace → one space, ends stripped.  ``str.split()`` and
+    the ``re`` ``\s`` class share one whitespace table, so this equals
+    ``re.sub(r"\s+", " ", s).strip()`` on every code point."""
+    return " ".join(s.split())
 
 
-# One-pass tag/comment tokenizer.  A hand-rolled find()-based scanner
-# (instead of the stdlib html.parser event machine) keeps this kernel ~6x
-# faster in the Arrow-batch hot path; the block/density semantics are
-# identical and pinned by the unit tests.  The scanner is STRICTLY LINEAR:
-# every character is consumed exactly once (str.find ranges never re-scan),
-# so adversarial inputs — floods of unterminated "<!--" or "<" with no
-# closing ">" — cost O(n), where a regex alternation tokenizer
-# (`<!--.*?-->|...|<[^>]*>`) degrades to O(n²) retrying each dead "<".
-# Quoted '>' inside attribute values is out of spec for this kernel;
-# unterminated comments/CDATA swallow to EOF (the HTML5 eof-in-comment
-# rule), and "<!-->"/"<!--->" close abruptly as in the HTML5 spec.
-_TAG_NAME_RE = re.compile(r"<(/?)\s*([a-zA-Z][a-zA-Z0-9]*)")
+# One-pass tag/comment tokenizer.  One compiled pattern finds the next "<"
+# and consumes the token through its ">": a tag (group 2 is its name,
+# group 1 the "/" of an end tag), a comment or CDATA opener (groups 3/4;
+# their bodies are skipped with find()), or a doctype/PI/malformed token.
+# The scanner is STRICTLY LINEAR.  Every search is bounded by the last ">"
+# of the document, so every "<" it meets has a ">" after it: the first "<"
+# at or after the cursor always matches, no match reaches past the next ">",
+# and the cursor moves past what it consumed — no search looks beyond the
+# token it returns.  An
+# unbounded search would instead retry each dead "<" of a "<a<a<a…" flood
+# with no ">" against the whole rest of the document, O(n²).  Past the last
+# ">" nothing can close a tag: the first "<" there is either a comment/CDATA
+# opener that swallows to EOF (the HTML5 eof-in-comment rule) or the end of
+# the markup, and the rest is data.  Quoted '>' inside attribute values is
+# out of spec for this kernel, and "<!-->"/"<!--->" close abruptly as in
+# the HTML5 spec.
+_TOKEN_RE = re.compile(
+    r"<(?:(/?)\s*([a-zA-Z][a-zA-Z0-9]*)[^>]*>|(!--)|(!\[CDATA\[)|[^>]*>)"
+)
 
 # HTML5 RAWTEXT elements: between "<script…>"/"<style…>" and the matching
 # case-insensitive close tag NOTHING is markup — "<p>" inside a JS string
@@ -108,133 +96,52 @@ def iter_tokens(html: str):
     """
     n = len(html)
     find = html.find
+    search = _TOKEN_RE.search
+    bound = html.rfind(">") + 1
     i = 0
-    while i < n:
-        lt = find("<", i)
-        if lt < 0:
-            break
-        if html.startswith("<!--", lt):
-            end = find("-->", lt + 2)
-            tok_end = n if end < 0 else end + 3
-        elif html.startswith("<![CDATA[", lt):
-            end = find("]]>", lt + 9)
-            tok_end = n if end < 0 else end + 3
-        else:
-            gt = find(">", lt + 1)
-            if gt < 0:
-                break  # no further tags: the rest (incl. '<') is data
-            tok_end = gt + 1
-            m = _TAG_NAME_RE.match(html, lt)
-            if m is not None and m.end() <= gt:
-                if lt > i:
-                    yield ("d", html[i:lt], None)
-                i = tok_end
-                tag = m.group(2).lower()
-                if m.group(1):
-                    yield ("e", tag, (lt, tok_end))
-                else:
-                    yield ("t", tag, (lt, tok_end))
-                    close = _RAWTEXT_CLOSE.get(tag)
-                    if close is not None:
-                        # RAWTEXT mode: one data run to the matching close
-                        # tag (or EOF) — still strictly linear: the search
-                        # scans the region once and i jumps past it.
-                        mm = close.search(html, i)
-                        if mm is None:
-                            if i < n:
-                                yield ("d", html[i:], None)
-                            return
-                        if mm.start() > i:
-                            yield ("d", html[i : mm.start()], None)
-                        gt2 = find(">", mm.end())
-                        end2 = n if gt2 < 0 else gt2 + 1
-                        yield ("e", tag, (mm.start(), end2))
-                        i = end2
-                continue
-            # doctype / PI / malformed: drop the "<...>" token
+    while (m := search(html, i, bound)) is not None:
+        lt = m.start()
         if lt > i:
             yield ("d", html[i:lt], None)
-        i = tok_end
+        slash, tag, comment, cdata = m.groups()
+        if tag is not None:
+            i = m.end()
+            tag = tag.lower()
+            if slash:
+                yield ("e", tag, (lt, i))
+                continue
+            yield ("t", tag, (lt, i))
+            close = _RAWTEXT_CLOSE.get(tag)
+            if close is not None:
+                # RAWTEXT mode: one data run to the matching close tag (or
+                # EOF) — still linear: the search scans the region once and
+                # i jumps past it.
+                mm = close.search(html, i)
+                if mm is None:
+                    if i < n:
+                        yield ("d", html[i:], None)
+                    return
+                if mm.start() > i:
+                    yield ("d", html[i : mm.start()], None)
+                gt = find(">", mm.end())
+                end = n if gt < 0 else gt + 1
+                yield ("e", tag, (mm.start(), end))
+                i = end
+        elif comment is not None:
+            end = find("-->", lt + 2)
+            i = n if end < 0 else end + 3
+        elif cdata is not None:
+            end = find("]]>", lt + 9)
+            i = n if end < 0 else end + 3
+        else:
+            i = m.end()  # doctype / PI / malformed: drop the "<...>" token
     if i < n:
-        yield ("d", html[i:], None)
-
-
-class _BlockTokenizer:
-    """Streams tag/text tokens into Block objects (document order)."""
-
-    def __init__(self) -> None:
-        self.blocks: list[dict] = []
-        self._cur = Block()
-        self._drop_depth = 0
-        self._boiler_depth = 0
-        self._anchor_depth = 0
-
-    def _flush(self) -> None:
-        cur = self._cur
-        in_boiler = self._boiler_depth > 0
-        if not cur.text_parts:  # nothing buffered: reuse the block object
-            cur.in_boiler = in_boiler
-            return
-        done = cur.finish()
-        if done is not None:
-            self.blocks.append(done)
-        self._cur = Block(in_boiler=in_boiler)
-
-    def _start(self, tag: str) -> None:
-        if tag in _DROP_TAGS:
-            self._drop_depth += 1
-            return
-        if self._drop_depth > 0:
-            return  # tags inside svg/iframe/noscript/… are not structure
-        if tag in _BOILER_TAGS:
-            self._flush()
-            self._boiler_depth += 1
-            self._cur.in_boiler = True
-            return
-        if tag == "a":
-            self._anchor_depth += 1
-        if tag in _BLOCK_TAGS or tag == "br":
-            self._flush()
-
-    def _end(self, tag: str) -> None:
-        if tag in _DROP_TAGS:
-            self._drop_depth = max(0, self._drop_depth - 1)
-            return
-        if self._drop_depth > 0:
-            return
-        if tag in _BOILER_TAGS:
-            self._flush()
-            self._boiler_depth = max(0, self._boiler_depth - 1)
-            self._cur.in_boiler = self._boiler_depth > 0
-            return
-        if tag == "a":
-            self._anchor_depth = max(0, self._anchor_depth - 1)
-        if tag in _BLOCK_TAGS:
-            self._flush()
-
-    def _data(self, data: str) -> None:
-        if self._drop_depth > 0 or not data:
-            return
-        if "&" in data:
-            import html as _html
-
-            data = _html.unescape(data)
-        self._cur.text_parts.append(data)
-        if self._anchor_depth > 0:
-            self._cur.anchor_chars += len(_WS_RE.sub(" ", data).strip())
-
-    def feed(self, html: str) -> None:
-        for kind, a, span in iter_tokens(html):
-            if kind == "d":
-                self._data(a)
-            elif kind == "t":
-                self._start(a)
-                # self-closing anchor: "<a .../>" opens and closes the link
-                if a == "a" and html[span[1] - 2] == "/":
-                    self._end(a)
-            else:
-                self._end(a)
-        self._flush()
+        lt = find("<", i)
+        if lt >= 0 and html.startswith(("<!--", "<![CDATA["), lt):
+            if lt > i:
+                yield ("d", html[i:lt], None)
+        else:
+            yield ("d", html[i:], None)
 
 
 # classifier thresholds (Boilerpipe-class rules, fixed for determinism)
@@ -244,14 +151,75 @@ MIN_TEXT_DENSITY = 8.0
 
 
 def block_features(html: str) -> list[dict]:
-    """Segment *html* into blocks and return their feature dicts in doc order."""
-    parser = _BlockTokenizer()
+    """Segment *html* into blocks and return their feature dicts in doc order.
+
+    A block ends at every block-level tag, ``<br>`` and boilerplate-region
+    boundary.  Text inside ``_DROP_TAGS`` subtrees is skipped; text inside
+    an ``<a>`` counts towards the block's anchor chars.  A block is marked
+    ``in_boiler`` when it lies inside a ``_BOILER_TAGS`` subtree.
+    """
+    blocks: list[dict] = []
+    parts: list[str] = []
+    anchor_chars = drop = boiler = anchor = 0
     try:
-        parser.feed(html)
+        for kind, a, span in iter_tokens(html):
+            if kind == "d":
+                if drop or not a:
+                    continue
+                if "&" in a:
+                    a = unescape(a)
+                parts.append(a)
+                if anchor:
+                    anchor_chars += len(collapse_ws(a))
+                continue
+            start = kind == "t"
+            if a in _DROP_TAGS:
+                if start:
+                    drop += 1
+                elif drop:
+                    drop -= 1
+                continue
+            if drop:
+                continue  # tags inside svg/iframe/noscript/… are not structure
+            if a == "a":
+                if start:
+                    # a self-closing "<a .../>" opens and closes the link
+                    if html[span[1] - 2] != "/":
+                        anchor += 1
+                elif anchor:
+                    anchor -= 1
+                continue
+            is_boiler = a in _BOILER_TAGS
+            if not (is_boiler or a in _BLOCK_TAGS or (start and a == "br")):
+                continue
+            if parts:  # the block ends here
+                blocks += _finish(parts, anchor_chars, boiler > 0)
+                parts = []
+                anchor_chars = 0
+            if is_boiler:
+                boiler = boiler + 1 if start else max(0, boiler - 1)
     except Exception:
-        # malformed markup: fall back to whatever blocks were collected
-        parser._flush()
-    return parser.blocks
+        pass  # malformed markup: keep whatever blocks were collected
+    if parts:
+        blocks += _finish(parts, anchor_chars, boiler > 0)
+    return blocks
+
+
+def _finish(parts: list[str], anchor_chars: int, in_boiler: bool) -> list[dict]:
+    """The finished block's feature dict, as a 0- or 1-element list."""
+    text = collapse_ws("".join(parts))
+    if not text:
+        return []
+    n_chars = len(text)
+    n_words = text.count(" ") + 1
+    return [{
+        "text": text,
+        "n_chars": n_chars,
+        "n_words": n_words,
+        "link_density": anchor_chars / n_chars,
+        "text_density": n_words / -(-n_chars // _WRAP_COLS),
+        "in_boiler": in_boiler,
+    }]
 
 
 def classify_blocks(blocks: list[dict]) -> list[bool]:

@@ -34,9 +34,8 @@ from __future__ import annotations
 import html as _htmllib
 import re
 
-from .html_extract import iter_tokens
+from .html_extract import collapse_ws, iter_tokens
 
-_WS_RE = re.compile(r"\s+")
 _SPAN_RE_CACHE: dict[str, re.Pattern] = {}
 
 MAX_COLSPAN = 1000
@@ -119,7 +118,7 @@ class _Table:
         if self.cell is None:
             return
         col, rs, cs, header, parts = self.cell
-        text = _WS_RE.sub(" ", _htmllib.unescape("".join(parts))).strip()
+        text = collapse_ws(_htmllib.unescape("".join(parts)))
         self.cells.append((self.row, col, rs, cs, header, text))
         self.cell = None
 

@@ -28,16 +28,9 @@ from __future__ import annotations
 import html as _htmllib
 import re
 
-from .html_extract import _DROP_TAGS, iter_tokens
+from .html_extract import _DROP_TAGS, collapse_ws, iter_tokens
 from .links import resolve_href
 from .meta import _attr_of
-
-_WS_RE = re.compile(r"\s+")
-
-
-def _norm(s: str) -> str:
-    return _WS_RE.sub(" ", s).strip()
-
 
 _SRCSET_DESC_RE = re.compile(r"^(\d+)(w|x)$")
 
@@ -101,7 +94,7 @@ def extract_images(html: str, base_url: str) -> list[dict]:
 
     def close_figure() -> None:
         frame = figures.pop()
-        caption = _norm("".join(frame["cap_parts"]))
+        caption = collapse_ws("".join(frame["cap_parts"]))
         for rec in frame["imgs"]:
             emit(rec, caption)
 
@@ -138,8 +131,8 @@ def extract_images(html: str, base_url: str) -> list[dict]:
                     continue
                 rec = {
                     "src": src,
-                    "alt": _norm(_attr_of(raw, "alt") or ""),
-                    "title": _norm(_attr_of(raw, "title") or ""),
+                    "alt": collapse_ws(_attr_of(raw, "alt") or ""),
+                    "title": collapse_ws(_attr_of(raw, "title") or ""),
                     "from_srcset": from_srcset,
                 }
                 if figures:

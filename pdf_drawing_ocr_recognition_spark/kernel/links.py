@@ -36,7 +36,7 @@ import html as _htmllib
 import re
 from urllib.parse import urldefrag, urljoin
 
-from .html_extract import _DROP_TAGS, _WS_RE, iter_tokens
+from .html_extract import _DROP_TAGS, collapse_ws, iter_tokens
 
 _HREF_RE = re.compile(
     r"""href\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+))""", re.IGNORECASE
@@ -87,7 +87,7 @@ def extract_links(html: str, base_url: str) -> list[dict]:
         if open_href is not None:
             resolved = resolve_href(open_href, base_url)
             if resolved is not None:
-                text = _WS_RE.sub(" ", "".join(anchor_parts)).strip()
+                text = collapse_ws("".join(anchor_parts))
                 out.append({"href": resolved, "anchor": text})
         open_href = None
         anchor_parts = []

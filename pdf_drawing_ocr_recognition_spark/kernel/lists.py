@@ -25,11 +25,9 @@ generalization, same tier as kernel/html_tables.py.
 from __future__ import annotations
 
 import html as _htmllib
-import re
 
-from .html_extract import _DROP_TAGS, iter_tokens
+from .html_extract import _DROP_TAGS, collapse_ws, iter_tokens
 
-_WS_RE = re.compile(r"\s+")
 _LIST_TAGS = {"ul": False, "ol": True}
 
 
@@ -52,7 +50,7 @@ def extract_list_items(html: str) -> list[dict]:
     def flush_item(frame: dict) -> None:
         if frame["item"] is None:
             return
-        text = _WS_RE.sub(" ", "".join(frame["item"])).strip()
+        text = collapse_ws("".join(frame["item"]))
         out.append(
             {
                 "list_idx": frame["list_idx"],

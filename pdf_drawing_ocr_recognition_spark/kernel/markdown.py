@@ -31,12 +31,10 @@ markdown sink, SURVEY A33) — this is its web-native input-side twin.
 from __future__ import annotations
 
 import html as _htmllib
-import re
 
-from .html_extract import _BLOCK_TAGS, _DROP_TAGS, iter_tokens
+from .html_extract import _BLOCK_TAGS, _DROP_TAGS, collapse_ws, iter_tokens
 from .meta import _attr_of
 
-_WS_RE = re.compile(r"\s+")
 _HEADING = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 _LIST = {"ul": False, "ol": True}
 
@@ -66,7 +64,7 @@ def render_markdown(html: str) -> str:
     table_header_done: list[bool] = []
 
     def norm(parts: list[str]) -> str:
-        return _WS_RE.sub(" ", "".join(parts)).strip()
+        return collapse_ws("".join(parts))
 
     def flush_para() -> None:
         nonlocal para

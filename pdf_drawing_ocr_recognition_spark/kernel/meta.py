@@ -17,11 +17,10 @@ from __future__ import annotations
 import html as _htmllib
 import re
 
-from .html_extract import iter_tokens
+from .html_extract import collapse_ws, iter_tokens
 from .links import resolve_href
 
 _ATTR_RES: dict[str, re.Pattern] = {}
-_WS_RE = re.compile(r"\s+")
 
 
 def _attr_of(raw_tag: str, name: str) -> str | None:
@@ -42,10 +41,6 @@ def _attr_of(raw_tag: str, name: str) -> str | None:
         return None
     val = next(g for g in m.groups() if g is not None)
     return _htmllib.unescape(val)
-
-
-def _norm(s: str) -> str:
-    return _WS_RE.sub(" ", s).strip()
 
 
 def extract_meta(html: str, base_url: str | None = None) -> dict:
@@ -84,7 +79,7 @@ def extract_meta(html: str, base_url: str | None = None) -> dict:
                 # wins (a bare <html> does not mask a later soup root) —
                 # compared against DETECTED language it is the MT-farm /
                 # mislabeled-page signal
-                html_lang = _norm(_attr_of(raw, "lang") or "").lower()
+                html_lang = collapse_ws(_attr_of(raw, "lang") or "").lower()
             elif a == "title":
                 if title is None and not in_title:
                     in_title = True
@@ -97,7 +92,7 @@ def extract_meta(html: str, base_url: str | None = None) -> dict:
                 if key is not None and content is not None:
                     k = key.strip().lower()
                     if k and k not in metas:
-                        metas[k] = _norm(content)
+                        metas[k] = collapse_ws(content)
             elif a == "link":
                 rel = set((_attr_of(raw, "rel") or "").lower().split())
                 href = _attr_of(raw, "href")
@@ -119,11 +114,11 @@ def extract_meta(html: str, base_url: str | None = None) -> dict:
         elif kind == "e":
             if a == "title" and in_title:
                 in_title = False
-                title = _norm(_htmllib.unescape("".join(title_parts)))
+                title = collapse_ws(_htmllib.unescape("".join(title_parts)))
         elif in_title:  # kind == "d"
             title_parts.append(a)
     if in_title and title is None:
-        title = _norm(_htmllib.unescape("".join(title_parts)))
+        title = collapse_ws(_htmllib.unescape("".join(title_parts)))
     return {
         "title": title,
         "canonical": canonical,

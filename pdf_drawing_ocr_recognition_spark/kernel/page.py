@@ -283,11 +283,3 @@ def _extract_grid(
         "n_cells": n_cells,
         "n_subs_failed": n_failed,
     }
-
-
-def decode_page(html: bytes, patterns: dict[str, dict]) -> list:
-    """Decode a payload into page rasters (grid) or [] (html) — debug helper."""
-    if is_grid_payload(html):
-        _, pngs = parse_grid_container(html)
-        return [decode_png(p) for p in pngs]
-    return []

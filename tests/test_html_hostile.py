@@ -167,6 +167,28 @@ class TestLinearTime:
         # linear ⇒ ~4x; allow generous noise on this host, reject ~16x
         assert big_t < 8 * small_t + 0.5, (small_t, big_t)
 
+    # "<" floods that an unbounded search of the token pattern would make
+    # quadratic, each dead "<" retried against the rest of the document;
+    # make(200_000) gives "<" + "a" * 1_000_000 and "<a" * 200_000
+    REGEX_FLOODS = {
+        "lt_letters": lambda k: "<" + "a" * (5 * k),
+        "lt_a_flood": lambda k: "<a" * k,
+        "lt_a_flood_final_gt": lambda k: "<a" * k + ">",
+    }
+
+    @pytest.mark.parametrize("name", sorted(REGEX_FLOODS))
+    def test_regex_flood_budget_and_scaling(self, name):
+        make = self.REGEX_FLOODS[name]
+        base, big = make(50_000), make(200_000)
+        t0 = time.monotonic()
+        extract_main_text(base)
+        t1 = time.monotonic()
+        extract_main_text(big)
+        t2 = time.monotonic()
+        small_t, big_t = t1 - t0, t2 - t1
+        assert big_t < self.BUDGET_S
+        assert big_t < 8 * small_t + 0.5, (small_t, big_t)
+
 
 class TestSparkByteIdentity:
     def test_extract_pages_matches_kernel_on_hostile_corpus(self, spark):

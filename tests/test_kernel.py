@@ -543,9 +543,10 @@ class TestLatticeFastPath:
             decode_cell_text,
         )
         from pdf_drawing_ocr_recognition_spark.kernel.page import (
-            decode_page,
             is_grid_payload,
+            parse_grid_container,
         )
+        from pdf_drawing_ocr_recognition_spark.kernel.png import decode_png
 
         def reference(ink):
             boxes = cell_bboxes(ink)
@@ -558,7 +559,8 @@ class TestLatticeFastPath:
         for _u, _t, html, _x, _l in gen_rows(800):
             if html and is_grid_payload(html):
                 try:
-                    rasters.extend(decode_page(html, PATTERNS))
+                    _, pngs = parse_grid_container(html)
+                    rasters.extend([decode_png(p) for p in pngs])
                 except Exception:
                     pass
         pat = PATTERNS["preset11_lcp"]
