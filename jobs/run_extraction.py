@@ -7,8 +7,11 @@
 
 Runs the manifest-resumable extraction job: one Spark job extracts every
 bucket not yet committed under <out>/_manifest, and killed runs resume
-idempotently (re-invoke with the same --out).  Per-partition metrics are
-written to <out>/_metrics alongside the results and the _manifest lineage.
+idempotently (re-invoke with the same --out and --buckets).  The printed
+document count is the sum of the committed manifest rows' n_rows.
+Per-partition metrics are written to <out>/_metrics and a cell-count
+histogram to <out>/_metrics_cells, alongside the results and the _manifest
+lineage.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ import argparse
 import sys
 
 
-def main(argv=None) -> int:
+def main(argv=None, spark=None) -> int:
     parser = argparse.ArgumentParser(description=__doc__)
     parser.add_argument("--pages", required=True)
     parser.add_argument("--patterns", required=True)
@@ -34,13 +37,18 @@ def main(argv=None) -> int:
     args = parser.parse_args(argv)
 
     from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
-    from pdf_drawing_ocr_recognition_spark.operators.manifest import run_with_manifest
-    from pdf_drawing_ocr_recognition_spark.operators.metrics import partition_metrics
+    from pdf_drawing_ocr_recognition_spark.operators.manifest import manifest_rows, run_with_manifest
+    from pdf_drawing_ocr_recognition_spark.operators.metrics import (
+        cell_count_histogram,
+        partition_metrics,
+    )
     from pdf_drawing_ocr_recognition_spark.plans.session import build_session
     from pdf_drawing_ocr_recognition_spark.sources.pages import read_pages
     from pdf_drawing_ocr_recognition_spark.sources.pattern_registry import load_patterns
 
-    spark = build_session(app="pdor-extract", master=args.master)
+    own_session = spark is None
+    if own_session:
+        spark = build_session(app="pdor-extract", master=args.master)
     patterns = load_patterns(args.patterns)
     langs = tuple(x for x in args.langs.split(",") if x)
 
@@ -59,15 +67,14 @@ def main(argv=None) -> int:
         args.out,
         n_buckets=args.buckets,
     )
-    n = result.count()
+    n = sum(row["n_rows"] for row in manifest_rows(args.out))
     partition_metrics(pages).write.mode("overwrite").parquet(f"{args.out}/_metrics")
-    from pdf_drawing_ocr_recognition_spark.operators.metrics import cell_count_histogram
-
     cell_count_histogram(result).write.mode("overwrite").parquet(
         f"{args.out}/_metrics_cells"
     )
     print(f"extraction complete: {n} documents → {args.out}")
-    spark.stop()
+    if own_session:
+        spark.stop()
     return 0
 
 

@@ -7,7 +7,6 @@ from .manifest import (
     read_manifest,
     run_with_manifest,
 )
-from .metrics import partition_metrics
 
 __all__ = [
     "extract_pages",
@@ -16,5 +15,4 @@ __all__ = [
     "manifest_path",
     "read_manifest",
     "run_with_manifest",
-    "partition_metrics",
 ]

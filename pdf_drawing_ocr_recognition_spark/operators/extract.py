@@ -57,8 +57,7 @@ def extract_pages(pages: DataFrame, patterns: dict[str, dict]) -> DataFrame:
 
     *patterns* is the small pattern dimension (ref registry,
     pdor/pdor_pattern.py:168-187) shipped to executors inside the task closure —
-    the degenerate broadcast join for a dict-sized dimension.  The relational
-    broadcast-join variant lives in ``operators/relational.py``.
+    the degenerate broadcast join for a dict-sized dimension.
     """
     cols = ["url", "html", "lang"]
 

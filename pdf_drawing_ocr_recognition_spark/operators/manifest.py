@@ -6,13 +6,20 @@ is_parsed :323-328) into job-level machinery for 10^12-document runs:
 - work is partitioned into **buckets** by ``pmod(xxhash64(url), n_buckets)``
   (content-addressed, independent of file layout, stable across runs);
 - each completed bucket commits its result dir ``bucket=K/`` (atomic rename)
-  AND then a manifest row ``_manifest/bucket-KKKKK.json`` (bucket, n_rows,
-  n_failed, wall_s, committed_ts; fsync + rename).  A bucket with no rows
-  commits a row with ``n_rows`` 0 and no result dir;
-- resume = ``range(n_buckets)`` minus the committed manifest files, listed on
-  the driver with no Spark job.  All pending buckets are extracted by ONE
-  write job, so a run scans its input once whatever ``n_buckets`` is, and a
-  fully committed output resumes with no extraction and no scan.
+  AND then a manifest row ``_manifest/bucket-KKKKK.json`` (bucket, n_buckets,
+  n_rows, n_failed, wall_s, committed_ts; fsync + rename).  A bucket with no
+  rows commits a row with ``n_rows`` 0 and no result dir;
+- resume = ``range(n_buckets)`` minus the committed buckets, read from the
+  manifest on the driver with no Spark job.  All pending buckets are
+  extracted by ONE write job, so a run scans its input once whatever
+  ``n_buckets`` is, and a fully committed output resumes with no extraction
+  and no scan.
+
+``n_buckets`` is fixed for the life of an output dir: under another count a
+bucket index names other urls, so a resume with a committed row of another
+count (or, for rows that record none, of an index ≥ ``n_buckets``) raises
+``ValueError``.  An output with no rows has no ``bucket=K/`` dir; its result
+is an empty frame with the usual columns.
 
 The manifest is itself a small JSON table next to the results, so lineage
 (which bucket produced which rows, at what throughput) is queryable with the
@@ -21,6 +28,7 @@ same engine (``read_manifest``).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -38,25 +46,27 @@ def manifest_path(output_dir: str) -> str:
     return os.path.join(output_dir, "_manifest")
 
 
-def _manifest_files(output_dir: str) -> list[str]:
-    path = manifest_path(output_dir)
-    if not os.path.isdir(path):
-        return []
-    return sorted(f for f in os.listdir(path) if f.endswith(".json"))
+def manifest_rows(output_dir: str) -> list[dict]:
+    """Committed manifest rows, read on the driver (no Spark job)."""
+    rows = []
+    for f in sorted(glob.glob(os.path.join(manifest_path(output_dir), "*.json"))):
+        with open(f, "r", encoding="utf-8") as fh:
+            rows.append(json.load(fh))
+    return rows
 
 
 def read_manifest(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed-bucket manifest (empty frame when no run has committed yet)."""
-    schema = "bucket INT, n_rows LONG, n_failed LONG, wall_s DOUBLE, committed_ts STRING"
-    rows = []
-    for f in _manifest_files(output_dir):
-        with open(os.path.join(manifest_path(output_dir), f), "r", encoding="utf-8") as fh:
-            rows.append(json.load(fh))
-    return spark.createDataFrame(rows, schema)
+    schema = "bucket INT, n_buckets INT, n_rows LONG, n_failed LONG, wall_s DOUBLE, committed_ts STRING"
+    return spark.createDataFrame(manifest_rows(output_dir), schema)
 
 
-def _commit_bucket(output_dir: str, bucket: int, n_rows: int, n_failed: int, wall_s: float) -> None:
-    """Atomic manifest commit: write temp file, fsync, rename."""
+def _commit_bucket(
+    output_dir: str, bucket: int, n_rows: int, n_failed: int, wall_s: float,
+    n_buckets: int | None = None,
+) -> None:
+    """Atomic manifest commit: write temp file, fsync, rename.  The streaming
+    path has no bucket count and records none."""
     path = manifest_path(output_dir)
     os.makedirs(path, exist_ok=True)
     payload = {
@@ -66,6 +76,8 @@ def _commit_bucket(output_dir: str, bucket: int, n_rows: int, n_failed: int, wal
         "wall_s": wall_s,
         "committed_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
+    if n_buckets is not None:
+        payload["n_buckets"] = n_buckets
     tmp = os.path.join(path, f".bucket-{bucket:05d}.json.tmp")
     final = os.path.join(path, f"bucket-{bucket:05d}.json")
     with open(tmp, "w", encoding="utf-8") as fh:
@@ -100,10 +112,23 @@ def run_with_manifest(
     deterministic, a stale ``bucket=K/`` or staging dir is removed before it
     is replaced, and a bucket counts as done only once its row is committed.
     """
-    done = {int(f[len("bucket-"):-len(".json")]) for f in _manifest_files(output_dir)}
+    done = set()
+    for row in manifest_rows(output_dir):
+        if row.get("n_buckets", n_buckets) != n_buckets or row["bucket"] >= n_buckets:
+            was = f"={row['n_buckets']}" if "n_buckets" in row else f" > {row['bucket']}"
+            raise ValueError(
+                f"{output_dir} was committed with n_buckets{was}; this run asks for "
+                f"n_buckets={n_buckets}.  Resume with the same count, or use a new dir."
+            )
+        done.add(row["bucket"])
     pending = [b for b in range(n_buckets) if b not in done]
     if pending:
         _extract_pending(pages, extract_fn, output_dir, n_buckets, pending)
+    if not glob.glob(os.path.join(output_dir, "bucket=*")):
+        # nothing landed, and a parquet read of no path fails: build the
+        # empty result from the plan instead (no Spark job runs)
+        none = extract_fn(pages.where(F.lit(False)))
+        return none.withColumn("bucket", bucket_of(F.col("url"), n_buckets))
     return spark.read.option("basePath", output_dir).parquet(
         os.path.join(output_dir, "bucket=*")
     )
@@ -130,5 +155,5 @@ def _extract_pending(pages, extract_fn, output_dir, n_buckets, pending) -> None:
         staged = os.path.join(staging, f"bucket={b}")
         if os.path.isdir(staged):
             os.replace(staged, final_dir)
-        _commit_bucket(output_dir, b, counts[f"n{b}"] or 0, counts[f"nf{b}"] or 0, wall_s)
+        _commit_bucket(output_dir, b, counts[f"n{b}"] or 0, counts[f"nf{b}"] or 0, wall_s, n_buckets)
     shutil.rmtree(staging)

@@ -114,8 +114,6 @@ def write_jsonl_corpus(
     interchange format (what a tokenizer/packing stage ingests).
 
     ``df.write.json`` IS JSONL (one object per line per part-file); column
-    subset keeps the lines lean.  Pair with
-    ``operators/compaction.compact_parquet_dir``'s sizing rule if the
-    upstream wrote many small parts.
+    subset keeps the lines lean.
     """
     extracted.select(*columns).write.mode(mode).json(path)

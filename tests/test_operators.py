@@ -1,5 +1,5 @@
-"""Operator-level Spark tests: relational pipeline equality, manifest resume,
-salted aggregation, metrics, multimodal plumbing."""
+"""Operator-level Spark tests: manifest resume, salted aggregation, metrics,
+multimodal plumbing."""
 
 import os
 
@@ -10,44 +10,6 @@ from pdf_drawing_ocr_recognition_spark.fixtures.gen_pages import PATTERNS, gen_r
 from pdf_drawing_ocr_recognition_spark.kernel import extract_document
 
 N_ROWS = 400
-
-
-class TestRelationalPipeline:
-    """The exploded/shuffled variant must reproduce the single-pass kernel
-    byte-for-byte on grid documents (ordering recovered by explicit keys)."""
-
-    def test_matches_kernel_on_grid_docs(self, spark, pages_small):
-        from pdf_drawing_ocr_recognition_spark.operators.relational import (
-            relational_extract,
-        )
-
-        pages = spark.read.parquet(pages_small)
-        got = {
-            r["url"]: r["extracted_text"]
-            for r in relational_extract(spark, pages, PATTERNS).collect()
-        }
-        assert got, "no grid docs decoded"
-        checked = 0
-        for url, _ts, html, _text, lang in gen_rows(600):
-            oracle = extract_document(url, html, lang, PATTERNS)
-            if url in got and oracle["status"] == "ok" and oracle["spans"] and (
-                oracle["spans"][0]["group"].startswith("page_")
-            ):
-                assert got[url] == oracle["extracted_text"], url
-                checked += 1
-        assert checked > 30, f"only {checked} grid docs cross-checked"
-
-    def test_shuffle_partitions_do_not_change_output(self, spark, pages_small):
-        from pdf_drawing_ocr_recognition_spark.operators.relational import (
-            relational_extract,
-        )
-
-        pages = spark.read.parquet(pages_small)
-        a = relational_extract(spark, pages.repartition(1), PATTERNS)
-        b = relational_extract(spark, pages.repartition(13), PATTERNS)
-        da = {r["url"]: r["extracted_text"] for r in a.collect()}
-        db = {r["url"]: r["extracted_text"] for r in b.collect()}
-        assert da == db
 
 
 class TestManifestResume:
@@ -194,6 +156,71 @@ class TestManifestResume:
         calls.clear()
         assert run_with_manifest(spark, pages, counting_fn, out_dir, n_buckets=64).count() == n
         assert len(calls) == 0
+
+    def test_resume_with_another_bucket_count_raises(self, spark, tmp_path, monkeypatch):
+        """Killed after 4 of 8 commits: a resume with 16 buckets would land
+        some urls twice and one with 4 would lose some, so both raise; the
+        resume with 8 finishes exactly once."""
+        import json
+
+        from pdf_drawing_ocr_recognition_spark.operators import manifest
+        from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
+
+        pages = self._pages(spark, tmp_path, n=200)
+        fn = lambda df: extract_pages(df, PATTERNS)
+        out_dir = str(tmp_path / "killed")
+        commit = manifest._commit_bucket
+        n_commits = []
+
+        def dying_commit(*args):
+            n_commits.append(1)
+            if len(n_commits) == 5:
+                raise RuntimeError("killed")
+            commit(*args)
+
+        monkeypatch.setattr(manifest, "_commit_bucket", dying_commit)
+        with pytest.raises(RuntimeError, match="killed"):
+            manifest.run_with_manifest(spark, pages, fn, out_dir, n_buckets=8)
+        monkeypatch.setattr(manifest, "_commit_bucket", commit)
+        for n in (16, 4):
+            with pytest.raises(ValueError, match=f"n_buckets=8; this run asks for n_buckets={n}"):
+                manifest.run_with_manifest(spark, pages, fn, out_dir, n_buckets=n)
+        assert [r["n_buckets"] for r in manifest.manifest_rows(out_dir)] == [8] * 4
+
+        rows = manifest.run_with_manifest(spark, pages, fn, out_dir, n_buckets=8).collect()
+        assert sorted(r["url"] for r in rows) == sorted(
+            r["url"] for r in pages.select("url").collect()
+        )
+
+        # rows written before rows recorded their count: the index of bucket
+        # 7 alone shows that 4 buckets cannot be the run's count
+        mdir = manifest.manifest_path(out_dir)
+        for name in os.listdir(mdir):
+            with open(os.path.join(mdir, name)) as f:
+                legacy = json.load(f)
+            del legacy["n_buckets"]
+            with open(os.path.join(mdir, name), "w") as f:
+                json.dump(legacy, f)
+        with pytest.raises(ValueError, match="n_buckets > 4;"):
+            manifest.run_with_manifest(spark, pages, fn, out_dir, n_buckets=4)
+
+    def test_empty_input_returns_an_empty_frame_and_resumes(self, spark, tmp_path):
+        """No row to extract: every bucket commits empty, no bucket dir
+        exists, and both the run and its resume return an empty frame with
+        the columns of a normal output."""
+        from pdf_drawing_ocr_recognition_spark.operators import manifest
+        from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
+
+        pages = self._pages(spark, tmp_path)
+        fn = lambda df: extract_pages(df, PATTERNS)
+        full = manifest.run_with_manifest(spark, pages, fn, str(tmp_path / "full"), n_buckets=4)
+        out_dir = str(tmp_path / "empty")
+        none = pages.filter(F.col("lang") == "no-such-lang")
+        for _ in range(2):
+            got = manifest.run_with_manifest(spark, none, fn, out_dir, n_buckets=4)
+            assert got.dtypes == full.dtypes
+            assert got.count() == 0
+        assert [r["n_rows"] for r in manifest.manifest_rows(out_dir)] == [0] * 4
 
 
 class TestBadRow:
@@ -623,29 +650,6 @@ class TestCorpusPrep:
         kept = {r["doc_id"]: r["split"] for r in mixed.select("doc_id", "split").collect()}
         orig = {r["doc_id"]: r["split"] for r in prepared.select("doc_id", "split").collect()}
         assert all(orig[k] == v for k, v in kept.items())
-
-
-class TestCompaction:
-    def test_compacts_small_files_and_preserves_rows(self, spark, tmp_path):
-        from pdf_drawing_ocr_recognition_spark.operators.compaction import (
-            compact_parquet_dir,
-            plan_compaction,
-        )
-
-        path = str(tmp_path / "landed")
-        spark.range(10000).selectExpr(
-            "id", "repeat('x', 50) AS pad"
-        ).repartition(24).write.parquet(path)
-        before = [f for f in os.listdir(path) if f.startswith("part-")]
-        assert len(before) == 24
-        want = spark.read.parquet(path).count()
-
-        n = compact_parquet_dir(spark, path, target_mb=256)
-        after = [f for f in os.listdir(path) if f.startswith("part-")]
-        assert len(after) == n == plan_compaction(path, 256) == 1
-        assert spark.read.parquet(path).count() == want
-        # already-compact dir is a no-op
-        assert compact_parquet_dir(spark, path, target_mb=256) == 1
 
 
 class TestSequencePacking:

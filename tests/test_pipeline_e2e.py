@@ -110,13 +110,3 @@ def test_warc_ts_range_pushed_down(spark, pages_small):
     pushed = plan.split("PushedFilters: [")[1].split("]")[0]
     assert "warc_ts" in pushed, pushed
     assert df.count() > 0
-
-
-def test_preflight(spark):
-    """A25 analog: env self-check passes in this runtime (documented intent,
-    not the reference's broken tuple bug — pdor/pdor_utils.py:42)."""
-    from pdf_drawing_ocr_recognition_spark.plans.preflight import check_env
-
-    report = check_env(spark)
-    assert report.ok, report.checks
-    assert report.checks["arrow_enabled"] == "true"
