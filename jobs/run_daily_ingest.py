@@ -5,9 +5,11 @@ the whole engine exists for:
       → crawl hygiene (optional): domain-blocklist drop (T56) and robots.txt
         REP filtering (T63) on URLs — before any content is touched
       → snapshot diff vs yesterday (CDC, T55): only added/changed urls go on
+        (a url fetched twice goes on once, with the body the snapshot records)
       → extraction kernel over the delta only, run once per day (A-series pipeline)
       → content hygiene (optional): the standard webtext quality funnel
         (T62 rules) on extracted text
+      → MinHash signatures of the delta's docs, computed once per day
       → incremental dedup probe against the persisted index (T44)
       → survivors land under <out>/day=<label>; state advances AFTER the
         survivors are materialized, with every stage journaled.
@@ -15,17 +17,23 @@ the whole engine exists for:
 Exactly-once resume (the M5 manifest pattern at job granularity): each day
 keeps a journal at <state>/journal/day=<label>.json recording which stages
 committed (survivors landed → index folded → snapshot advanced → complete).
-The day's summary is journaled when the survivors land.  A kill before
-that restarts the day from CDC; a killed job resumes from the first
-unjournaled stage — in particular, a kill after the index fold but before
-the snapshot advance can NEVER replay extraction against an index that
-already contains today's documents (which would dedup the whole day away
-and overwrite the landed output with an empty frame); the resume reads the
-landed survivors back instead of recomputing them.  A fully completed day
-reruns as a no-op.  The one remaining at-least-once window — the process
-dying between a completed index fold and its journal write — re-appends
-today's digests to the index, which is harmless by construction (the index
-feeds semi/anti-join probes; duplicate rows change no result).
+The day's summary and ``snapshot_staged`` are journaled when the survivors
+land.  A kill before that restarts the day from CDC; a killed job resumes
+from the first unjournaled stage — in particular, a kill after the index
+fold but before the snapshot advance can NEVER replay extraction against an
+index that already contains today's documents (which would dedup the whole
+day away and overwrite the landed output with an empty frame); the resume
+reads the landed survivors back instead of recomputing them, and signs them
+again for the index fold (the day's signatures lived in the killed job's
+cache).  The snapshot advance swaps the staged digests in, and a retry after
+a kill at any point finishes the swap.  The staging dir is shared, so a day
+must complete (or be resumed to completion) before the next day starts.  A
+journal of an earlier version that landed the survivors without staging a
+snapshot stops the job (see MIGRATION.md).  A fully completed day reruns as
+a no-op.  The one remaining at-least-once window — the process dying
+between a completed index fold and its journal write — re-appends today's
+digests to the index, which is harmless by construction (the index feeds
+semi/anti-join probes; duplicate rows change no result).
 
     spark-submit --py-files dist/pdor_spark.zip jobs/run_daily_ingest.py \
         --warc <segment dir> --patterns <registry.json> \
@@ -33,12 +41,19 @@ feeds semi/anti-join probes; duplicate rows change no result).
 
 State layout (all tiny relative to the corpus — the corpus itself is never
 rescanned):
-    <state>/snapshot/   (url, html_digest)  — yesterday's page digests
-    <state>/index/      dedup index (digests + minhash bands, T44 layout)
+    <state>/snapshot/           (url, html_digest) — yesterday's page digests
+    <state>/snapshot.staging/   today's (url, html_digest), written during CDC;
+                                it becomes <state>/snapshot when the day's
+                                index fold has committed
+    <state>/index/              dedup index (digests + minhash bands, T44 layout)
 
 Work per day scales with |today's crawl| for the diff and with |delta| for
-extraction + dedup: the diff's full-outer join is the only stage that touches
-every url, and it carries 32-byte digests, not bodies.
+extraction + dedup.  Today's pages are read twice: once to stage their
+(url, md5(html)) rows, which also counts them, and once to pick the delta's
+bodies for extraction.  The diff is an anti join of the staged rows against
+yesterday's, so it carries 32-byte digests, not bodies.  The delta is
+extracted once into a cache and its docs are MinHash-signed once into a
+cache; the dedup probe and the index fold read both.
 """
 
 from __future__ import annotations
@@ -46,6 +61,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import uuid
 
@@ -75,6 +91,15 @@ def _advance_journal(state: str, day: str, **fields) -> dict:
         os.fsync(f.fileno())
     os.replace(tmp, path)
     return journal
+
+
+def _swap_in_snapshot(staging: str, live: str) -> None:
+    """Make the staged digests the snapshot.  Idempotent: a retry after a
+    kill at any point finishes the swap, and once the staging dir is gone
+    the snapshot already holds it."""
+    if os.path.exists(staging):
+        shutil.rmtree(live, ignore_errors=True)
+        os.rename(staging, live)
 
 
 def _fault_injection_point(stage: str) -> None:
@@ -123,10 +148,10 @@ def main(argv=None, spark=None) -> int:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from pdf_drawing_ocr_recognition_spark.operators.cdc import snapshot_diff
     from pdf_drawing_ocr_recognition_spark.operators.dedup import (
         append_to_dedup_index,
         incremental_dedupe,
+        minhash_signatures,
         write_dedup_index,
     )
     from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
@@ -152,8 +177,25 @@ def main(argv=None, spark=None) -> int:
             spark.stop()
         return 0
     out_path = f"{args.out}/day={args.day}"
+    snap_path = f"{args.state}/snapshot"
+    staging_path = f"{args.state}/snapshot.staging"
+    index_path = f"{args.state}/index"
 
     snap_mode = bool(args.snapshots)
+    if (
+        not snap_mode
+        and journal.get("survivors_done")
+        and not journal.get("snapshot_done")
+        and not journal.get("snapshot_staged")
+        and not os.path.exists(staging_path)
+    ):
+        # an earlier version landed this day's survivors but never staged
+        # its snapshot: journaling snapshot_done now would skip the advance
+        raise SystemExit(
+            f"day {args.day}: the journal comes from an earlier version that "
+            f"stages no snapshot, and {staging_path} does not exist; see "
+            "MIGRATION.md, 'Upgrading a daily-ingest state directory'"
+        )
     if args.warc:
         pages = read_warc(spark, args.warc, default_lang=langs[0] if langs else "en")
     elif snap_mode:
@@ -244,37 +286,65 @@ def main(argv=None, spark=None) -> int:
             pages = pages.join(allowed.select("url"), "url", "left_semi")
             n_robots = n_after_bl - pages.count()
 
-    # --- CDC: diff today's digests against yesterday's snapshot ------------
-    today = pages.select(
-        "url", F.md5(F.col("html")).alias("html_digest")
-    ).dropDuplicates(["url"])
-    snap_path = f"{args.state}/snapshot"
-    index_path = f"{args.state}/index"
-
+    # a resumed day has no cached signatures: the index fold signs again
+    delta_sigs = None
     if not journal.get("survivors_done"):
+        dup_urls = False
         if snap_mode:
             # the table's commit log IS the delta: no digest CDC needed
             first_day = journal["snap_from"] == 0
             delta_pages = pages
         else:
-            try:
-                prev = spark.read.parquet(snap_path)
-                first_day = False
-            except Exception:
-                prev = spark.createDataFrame(
-                    [], "url string, html_digest string"
+            digest_schema = "url string, html_digest string"
+            first_day = not os.path.exists(snap_path)
+            if first_day:
+                prev = spark.createDataFrame([], digest_schema)
+            else:
+                prev = spark.read.schema(digest_schema).parquet(snap_path)
+            # --- CDC: stage today's (url, digest) rows once; the diff reads
+            # them back, and the snapshot step swaps them in ----------------
+            fetches, urls = Observation("fetches"), Observation("pages_today")
+            (
+                pages.select("url", F.md5(F.col("html")).alias("html_digest"))
+                .observe(fetches, F.count("*").alias("n"))
+                .dropDuplicates(["url"])
+                .observe(urls, F.count("*").alias("n"))
+                .write.mode("overwrite").parquet(staging_path)
+            )
+            n_today = urls.get["n"]
+            today = spark.read.schema(digest_schema).parquet(staging_path)
+            # added or changed: no (url, digest) pair of yesterday matches
+            # (a NULL body matches a NULL body, as in operators.cdc)
+            old = prev.select(
+                F.col("url").alias("old_url"), F.col("html_digest").alias("old_digest")
+            )
+            delta = today.join(
+                old,
+                (F.col("url") == F.col("old_url"))
+                & F.col("html_digest").eqNullSafe(F.col("old_digest")),
+                "left_anti",
+            )
+            dup_urls = fetches.get["n"] > n_today
+            if dup_urls:
+                # a url fetched more than once today: only the fetches whose
+                # body the staged snapshot records go on, and one of them
+                # is kept after extraction (no shuffle of the bodies)
+                delta_pages = pages.withColumn(
+                    "html_digest", F.md5(F.col("html"))
+                ).join(
+                    delta.select("url", "html_digest"),
+                    ["url", "html_digest"],
+                    "left_semi",
                 )
-                first_day = True
-            diff = snapshot_diff(prev, today, "url", ["html_digest"])
-            delta_urls = diff.filter(
-                F.col("change_type").isin("added", "changed")
-            ).select("url")
-            n_today = today.count()
-            delta_pages = pages.join(delta_urls, "url", "left_semi")
+            else:
+                delta_pages = pages.join(delta.select("url"), "url", "left_semi")
 
         # --- extraction over the delta only, once: the count runs the kernel
         # (one row per page); every later read hits the cache ---------------
-        extracted = extract_pages(delta_pages, patterns).persist()
+        extracted = extract_pages(delta_pages, patterns)
+        if dup_urls:
+            extracted = extracted.dropDuplicates(["url"])
+        extracted = extracted.persist()
         n_delta = extracted.count()
         if snap_mode:
             n_today = n_delta
@@ -292,16 +362,25 @@ def main(argv=None, spark=None) -> int:
             docs = apply_funnel(docs, webtext_rules(F.col("extracted_text")))
             n_quality_dropped = n_docs_in - docs.count()
 
+        # --- MinHash-sign the delta's docs once: the probe's corpus and
+        # within-batch branches and the index fold all read these rows.
+        # The count fills the cache before the probe's single plan reads
+        # it twice (lazily, each branch would sign on its own) -------------
+        delta_sigs = minhash_signatures(docs, "extracted_text", "url").persist()
+        delta_sigs.count()
+
         # --- incremental dedup probe against ALL history --------------------
-        try:
-            digests = spark.read.parquet(f"{index_path}/digests")
-            bands = spark.read.parquet(f"{index_path}/bands")
-            have_index = True
-        except Exception:
-            have_index = False
+        have_index = all(
+            os.path.exists(f"{index_path}/{rel}") for rel in ("digests", "bands")
+        )
         if have_index:
             survivors = incremental_dedupe(
-                docs, digests, bands, "extracted_text", "url"
+                docs,
+                spark.read.parquet(f"{index_path}/digests"),
+                spark.read.parquet(f"{index_path}/bands"),
+                "extracted_text",
+                "url",
+                sigs=delta_sigs,
             )
         else:
             survivors = docs
@@ -315,6 +394,7 @@ def main(argv=None, spark=None) -> int:
             args.day,
             survivors_done=True,
             have_index=have_index,
+            snapshot_staged=not snap_mode,
             summary={
                 "day": args.day,
                 "first_day": first_day,
@@ -335,11 +415,11 @@ def main(argv=None, spark=None) -> int:
 
     # --- advance state AFTER the survivors are materialized -----------------
     if not journal.get("index_done"):
-        if journal["have_index"]:
-            append_to_dedup_index(kept, index_path, "extracted_text", "url")
-        else:
-            write_dedup_index(kept, index_path, "extracted_text", "url")
+        fold = append_to_dedup_index if journal["have_index"] else write_dedup_index
+        fold(kept, index_path, "extracted_text", "url", sigs=delta_sigs)
         journal = _advance_journal(args.state, args.day, index_done=True)
+    if delta_sigs is not None:
+        delta_sigs.unpersist()
     _fault_injection_point("after_index")
 
     if not journal.get("snapshot_done"):
@@ -353,10 +433,7 @@ def main(argv=None, spark=None) -> int:
                 os.fsync(f.fileno())
             os.replace(tmp, cursor_path)
         else:
-            # `today` derives only from the input paths (never from
-            # snap_path), and every plan that read `prev` has already been
-            # materialized above, so a direct overwrite cannot self-read.
-            today.write.mode("overwrite").parquet(snap_path)
+            _swap_in_snapshot(staging_path, snap_path)
         journal = _advance_journal(args.state, args.day, snapshot_done=True)
 
     _advance_journal(args.state, args.day, complete=True)

@@ -45,6 +45,7 @@ def main(argv=None) -> int:
     from pdf_drawing_ocr_recognition_spark.operators.dedup import (
         append_to_dedup_index,
         incremental_dedupe,
+        minhash_signatures,
         write_dedup_index,
     )
     from pdf_drawing_ocr_recognition_spark.plans.session import build_session
@@ -57,18 +58,24 @@ def main(argv=None) -> int:
         print(f"index bootstrapped: {n} digests → {args.index}")
     else:
         batch = spark.read.parquet(args.batch)
+        # signed once: the probe's two near branches and the index fold
+        # read the same materialized signatures
+        sigs = minhash_signatures(batch, args.text_col, args.key_col).localCheckpoint()
         survivors = incremental_dedupe(
             batch,
             spark.read.parquet(f"{args.index}/digests"),
             spark.read.parquet(f"{args.index}/bands"),
             args.text_col,
             args.key_col,
+            sigs=sigs,
         )
         survivors.write.mode("overwrite").parquet(f"{args.out}/survivors")
         kept = spark.read.parquet(f"{args.out}/survivors")
         n_in, n_kept = batch.count(), kept.count()
         if not args.no_append:
-            append_to_dedup_index(kept, args.index, args.text_col, args.key_col)
+            append_to_dedup_index(
+                kept, args.index, args.text_col, args.key_col, sigs=sigs
+            )
         print(
             f"incremental dedup: {n_in} in → {n_kept} kept "
             f"({n_in - n_kept} dropped); index "

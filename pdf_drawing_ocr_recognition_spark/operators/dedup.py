@@ -266,18 +266,26 @@ def build_dedup_index(
     key_col: str = "doc_id",
     n_bands: int = 4,
     rows_per_band: int = 4,
+    sigs: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The two index relations an incremental pipeline persists ONCE per
     corpus: (digest, key) for exact membership and (band_key, key) for
     MinHash-LSH near membership.  Pure plan builder — callers choose the
     storage layout (``write_dedup_index`` for parquet paths,
     ``operators.skew.write_bucketed`` for the Hive-bucketed zero-Exchange
-    probe layout)."""
+    probe layout).
+
+    *sigs*, when given, are ``minhash_signatures`` rows (key, sig) already
+    computed over a superset of *corpus*; they are semi-joined to the
+    corpus keys instead of signing the corpus again."""
     digests = corpus.select(
         F.md5(F.encode(F.col(text_col), "utf-8")).alias("digest"),
         F.col(key_col),
     )
-    sigs = minhash_signatures(corpus, text_col, key_col)
+    if sigs is None:
+        sigs = minhash_signatures(corpus, text_col, key_col)
+    else:
+        sigs = sigs.join(corpus.select(key_col), key_col, "left_semi")
     bands = sigs.select(
         F.explode(lsh_band_keys(F.col("sig"), n_bands, rows_per_band)).alias(
             "band_key"
@@ -295,15 +303,22 @@ def write_dedup_index(
     n_bands: int = 4,
     rows_per_band: int = 4,
     mode: str = "overwrite",
+    sigs: DataFrame | None = None,
 ) -> None:
     """Persist the dedup index as parquet at ``{base_path}/digests`` and
     ``{base_path}/bands`` (catalog-free layout; for the Hive-bucketed
     variant — probe joins with zero index-side Exchange — write the two
     relations with ``write_bucketed(digests, t, n, "digest")`` /
     ``write_bucketed(bands, t, n, "band_key")`` instead, tested in
-    tests/test_dedup_similarity.py)."""
+    tests/test_dedup_similarity.py).
+
+    *sigs*: signatures computed earlier over a superset of *corpus* (for
+    example the batch that ``incremental_dedupe`` probed, of which *corpus*
+    holds the survivors); the bands are built from the corpus keys' rows
+    of it instead of signing the corpus again.  Without it the corpus is
+    signed here."""
     digests, bands = build_dedup_index(
-        corpus, text_col, key_col, n_bands, rows_per_band
+        corpus, text_col, key_col, n_bands, rows_per_band, sigs
     )
     digests.write.mode(mode).parquet(f"{base_path}/digests")
     bands.write.mode(mode).parquet(f"{base_path}/bands")
@@ -316,13 +331,15 @@ def append_to_dedup_index(
     key_col: str = "doc_id",
     n_bands: int = 4,
     rows_per_band: int = 4,
+    sigs: DataFrame | None = None,
 ) -> None:
     """Fold an accepted batch into the index (append-only parquet): the next
     day's batch then dedupes against corpus ∪ all prior batches without any
-    rescan of the documents themselves."""
+    rescan of the documents themselves.  *sigs* as in
+    ``write_dedup_index``."""
     write_dedup_index(
         survivors, base_path, text_col, key_col, n_bands, rows_per_band,
-        mode="append",
+        mode="append", sigs=sigs,
     )
 
 
@@ -334,6 +351,7 @@ def incremental_dedupe(
     key_col: str = "doc_id",
     n_bands: int = 4,
     rows_per_band: int = 4,
+    sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Dedupe a NEW batch against an accumulated corpus WITHOUT rescanning
     the corpus — the operation a daily 100-TB ingest runs.
@@ -356,6 +374,13 @@ def incremental_dedupe(
     Hive-bucketed on its join key, so probing shuffles ONLY the new batch
     (index-side zero-Exchange plan asserted in tests).  Work scales with
     |batch|, not |corpus|.
+
+    *sigs* are the batch's ``minhash_signatures(batch, text_col, key_col)``
+    rows, computed and materialized by the caller (``persist`` plus an
+    action, or ``localCheckpoint``) so that the signatures can also feed
+    the index fold.  The corpus and within-batch near branches both read
+    them, in one plan: a lazy, unmaterialized frame is signed once per
+    branch.  Without *sigs* the batch is signed here.
     """
     b_digest = batch.select(
         F.col(key_col),
@@ -374,7 +399,8 @@ def incremental_dedupe(
             F.explode(F.slice(F.col("ids"), 2, F.size("ids") - 1)).alias(key_col)
         )
     )
-    sigs = minhash_signatures(batch, text_col, key_col)
+    if sigs is None:
+        sigs = minhash_signatures(batch, text_col, key_col)
     banded = sigs.select(
         key_col,
         F.explode(lsh_band_keys(F.col("sig"), n_bands, rows_per_band)).alias(

@@ -68,22 +68,30 @@ def streaming_incremental_dedupe(
 
     Returns the started StreamingQuery (caller awaits termination).
     """
-    from ..operators.dedup import append_to_dedup_index, incremental_dedupe
+    from ..operators.dedup import (
+        append_to_dedup_index,
+        incremental_dedupe,
+        minhash_signatures,
+    )
 
     def land(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
+        # signed once: the probe's two near branches and the index fold
+        # read the same materialized signatures
+        sigs = minhash_signatures(batch, text_col, key_col).localCheckpoint()
         survivors = incremental_dedupe(
             batch,
             spark.read.parquet(f"{index_path}/digests"),
             spark.read.parquet(f"{index_path}/bands"),
             text_col,
             key_col,
+            sigs=sigs,
         )
         # idempotent per-batch landing dir: a replayed batch overwrites
         survivors.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
         if append_index:
             kept = spark.read.parquet(f"{out_path}/batch={batch_id}")
-            append_to_dedup_index(kept, index_path, text_col, key_col)
+            append_to_dedup_index(kept, index_path, text_col, key_col, sigs=sigs)
 
     return (
         docs.writeStream.foreachBatch(land)

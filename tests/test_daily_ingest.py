@@ -1,7 +1,11 @@
 """End-to-end daily ingest job (jobs/run_daily_ingest.py): WARC → CDC delta
 → extraction → incremental dedup probe → state advance, across two days."""
 
+import hashlib
 import json
+import shutil
+
+import pytest
 
 from pdf_drawing_ocr_recognition_spark.fixtures.gen_pages import make_html
 from pdf_drawing_ocr_recognition_spark.kernel.warc import build_warc
@@ -46,13 +50,57 @@ def _run(spark, tmp_path, capsys, day: str, records: list[dict], extra=()):
     return summary
 
 
-def _assert_uninterrupted_summary(spark, tmp_path, capsys, resumed, records):
+def _rows(spark, path, *cols):
+    return sorted(tuple(r) for r in spark.read.parquet(str(path)).select(*cols).collect())
+
+
+def _assert_uninterrupted(spark, tmp_path, capsys, resumed, records):
     """A resumed day reports the summary of the same day run without a kill
-    on fresh state (the output path aside)."""
+    on fresh state (the output path aside), and leaves the same dedup index
+    ((band_key, url) and (digest, url) multisets) and snapshot."""
     fresh = tmp_path / "uninterrupted"
     fresh.mkdir()
     clean = _run(spark, fresh, capsys, resumed["day"], records)
     assert resumed == {**clean, "out": resumed["out"]}
+    for rel, cols in (
+        ("index/bands", ("band_key", "url")),
+        ("index/digests", ("digest", "url")),
+        ("snapshot", ("url", "html_digest")),
+    ):
+        assert _rows(spark, tmp_path / "state" / rel, *cols) == _rows(
+            spark, fresh / "state" / rel, *cols
+        ), rel
+
+
+def _log_rows(fn, log_dir: str):
+    """Wrap a DataFrame-returning *fn* with a pass-through ``mapInPandas``
+    that writes each Arrow batch's row count to a file under *log_dir*, so
+    ``_rows_logged`` counts the rows computed through *fn* — once per
+    evaluation of its plan, not once per call."""
+
+    def logged(*args, **kwargs):
+        out = fn(*args, **kwargs)
+
+        def log(batches):
+            import os
+            import uuid
+
+            for pdf in batches:
+                with open(os.path.join(log_dir, uuid.uuid4().hex), "w") as f:
+                    f.write(str(len(pdf)))
+                yield pdf
+
+        return out.mapInPandas(log, out.schema)
+
+    return logged
+
+
+def _rows_logged(log_dir: str) -> int:
+    import os
+
+    return sum(
+        int(open(os.path.join(log_dir, n)).read()) for n in os.listdir(log_dir)
+    )
 
 
 class TestDailyIngest:
@@ -65,41 +113,46 @@ class TestDailyIngest:
         from pdf_drawing_ocr_recognition_spark.operators import extract
 
         log_dir = str(tmp_path / "batches")
-        real = extract.extract_pages
-
-        def logged(pages, patterns):
-            out = real(pages, patterns)
-
-            def log(batches):
-                import os
-                import uuid
-
-                for pdf in batches:
-                    with open(os.path.join(log_dir, uuid.uuid4().hex), "w") as f:
-                        f.write(str(len(pdf)))
-                    yield pdf
-
-            return out.mapInPandas(log, out.schema)
-
-        def rows_seen():
-            import os
-
-            return sum(
-                int(open(os.path.join(log_dir, n)).read())
-                for n in os.listdir(log_dir)
-            )
-
-        monkeypatch.setattr(extract, "extract_pages", logged)
+        monkeypatch.setattr(
+            extract, "extract_pages", _log_rows(extract.extract_pages, log_dir)
+        )
         day1 = [_page(i, 1200 + i) for i in range(4)]
         (tmp_path / "batches").mkdir()
         _run(spark, tmp_path, capsys, "d1", day1)
-        assert rows_seen() == 4
+        assert _rows_logged(log_dir) == 4
         # day 2: the day-1 pages unchanged plus two new ones
         (tmp_path / "batches").rename(tmp_path / "batches_d1")
         (tmp_path / "batches").mkdir()
         s2 = _run(spark, tmp_path, capsys, "d2", day1 + [_page(i, 1300 + i) for i in (4, 5)])
         assert s2["delta_pages"] == 2
-        assert rows_seen() == s2["delta_pages"]
+        assert _rows_logged(log_dir) == s2["delta_pages"]
+
+    def test_each_delta_doc_is_signed_once(
+        self, spark, tmp_path, capsys, monkeypatch
+    ):
+        """The dedup probe's corpus and within-batch near branches and the
+        index fold all read ONE MinHash signing of the day's ok delta docs."""
+        from pdf_drawing_ocr_recognition_spark.operators import dedup
+
+        log_dir = str(tmp_path / "batches")
+        monkeypatch.setattr(
+            dedup,
+            "minhash_signatures",
+            _log_rows(dedup.minhash_signatures, log_dir),
+        )
+        day1 = [_page(i, 1250 + i) for i in range(4)]
+        (tmp_path / "batches").mkdir()
+        _run(spark, tmp_path, capsys, "d1", day1)
+        assert _rows_logged(log_dir) == 4
+        # day 2 probes the day-1 index: two new ok pages, one duplicating a
+        # day-1 page (dropped by the probe, so the fold gets one survivor)
+        (tmp_path / "batches").rename(tmp_path / "batches_d1")
+        (tmp_path / "batches").mkdir()
+        day2 = day1 + [_page(4, 1350), {**_page(0, 1250), "url": "https://dup.example/p"}]
+        s2 = _run(spark, tmp_path, capsys, "d2", day2)
+        ok = spark.read.parquet(s2["out"]).count()
+        assert s2["delta_pages"] == 2 and ok == s2["survivors"] == 1
+        assert _rows_logged(log_dir) == s2["delta_pages"]
 
     def test_two_day_ingest_processes_only_the_delta(
         self, spark, tmp_path, capsys
@@ -181,11 +234,13 @@ class TestDailyIngest:
         # the kill left: survivors landed, index folded, snapshot stale
         assert spark.read.parquet(str(tmp_path / "out" / "day=d1")).count() == 4
         assert not (tmp_path / "state" / "snapshot").exists()
+        assert (tmp_path / "state" / "snapshot.staging").exists()
 
         monkeypatch.setattr(job, "_fault_injection_point", lambda stage: None)
         s = _run(spark, tmp_path, capsys, "d1", day1)
         assert s["survivors"] == 4  # the landed day is preserved, not wiped
-        _assert_uninterrupted_summary(spark, tmp_path, capsys, s, day1)
+        assert not (tmp_path / "state" / "snapshot.staging").exists()
+        _assert_uninterrupted(spark, tmp_path, capsys, s, day1)
         assert spark.read.parquet(s["out"]).count() == 4
         snap = spark.read.parquet(str(tmp_path / "state" / "snapshot"))
         assert snap.count() == 4  # snapshot advanced on resume
@@ -293,9 +348,74 @@ class TestDailyIngest:
         monkeypatch.setattr(job, "_fault_injection_point", lambda stage: None)
         s = _run(spark, tmp_path, capsys, "d1", day1)
         assert s["survivors"] == 3
-        _assert_uninterrupted_summary(spark, tmp_path, capsys, s, day1)
+        assert not (tmp_path / "state" / "snapshot.staging").exists()
+        _assert_uninterrupted(spark, tmp_path, capsys, s, day1)
         idx = spark.read.parquet(str(tmp_path / "state" / "index" / "digests"))
         assert idx.count() == 3
+
+    def test_url_fetched_twice_in_a_day_lands_once(self, spark, tmp_path, capsys):
+        """A url listed twice in one day's crawl reaches the output once: on
+        day 1 (no index) and on day 2, where the probe's within-batch exact
+        branch used to make the url its own loser and drop both rows.  With
+        two bodies, the one whose digest the snapshot records lands."""
+        from pdf_drawing_ocr_recognition_spark.fixtures.gen_pages import PATTERNS
+        from pdf_drawing_ocr_recognition_spark.kernel.page import extract_document
+
+        day1 = [_page(i, 1400 + i) for i in range(3)]
+        twice = _page(3, 1403)
+        bodies = [_page(4, 1404), _page(4, 1504)]  # one url, two bodies
+        s1 = _run(spark, tmp_path, capsys, "d1", day1 + [twice, twice, *bodies])
+        assert s1["pages_today"] == s1["delta_pages"] == 5
+        out1 = spark.read.parquet(s1["out"])
+        assert out1.count() == out1.select("url").distinct().count() == 5
+        snap = dict(_rows(spark, tmp_path / "state" / "snapshot", "url", "html_digest"))
+        texts = {
+            hashlib.md5(p["body"]).hexdigest(): extract_document(
+                p["url"], p["body"], "en", PATTERNS
+            )["extracted_text"]
+            for p in bodies
+        }
+        assert len(set(texts.values())) == 2
+        landed = out1.filter(out1.url == bodies[0]["url"]).first()["extracted_text"]
+        assert landed == texts[snap[bodies[0]["url"]]]
+
+        # day 2: the three day-1 pages unchanged, one new url listed twice
+        s2 = _run(spark, tmp_path, capsys, "d2", day1 + [_page(5, 1405)] * 2)
+        assert s2["pages_today"] == 4
+        assert s2["delta_pages"] == 1 and s2["survivors"] == 1
+        assert _rows(spark, s2["out"], "url") == [("https://t5.example/p",)]
+
+    def test_resume_of_a_day_journaled_without_a_staged_snapshot_refuses(
+        self, spark, tmp_path, capsys, monkeypatch
+    ):
+        """A day that an earlier version left between its survivors write and
+        its snapshot advance has no staged snapshot: the resume must stop and
+        point to MIGRATION.md, never journal snapshot_done over a stale
+        snapshot."""
+        import jobs.run_daily_ingest as job
+
+        day1 = [_page(i, 920 + i) for i in range(3)]
+
+        def kill(stage):
+            if stage == "after_survivors":
+                raise KeyboardInterrupt("injected kill")
+
+        monkeypatch.setattr(job, "_fault_injection_point", kill)
+        with pytest.raises(KeyboardInterrupt):
+            _run(spark, tmp_path, capsys, "d1", day1)
+        # what the earlier version leaves: no staging dir, no snapshot_staged
+        state = tmp_path / "state"
+        shutil.rmtree(state / "snapshot.staging")
+        path = state / "journal" / "day=d1.json"
+        journal = json.loads(path.read_text())
+        del journal["snapshot_staged"]
+        path.write_text(json.dumps(journal))
+
+        monkeypatch.setattr(job, "_fault_injection_point", lambda stage: None)
+        with pytest.raises(SystemExit, match="MIGRATION.md"):
+            _run(spark, tmp_path, capsys, "d1", day1)
+        assert json.loads(path.read_text()) == journal
+        assert not (state / "snapshot").exists() and not (state / "index").exists()
 
     def test_hygiene_gates_blocklist_robots_and_funnel(
         self, spark, tmp_path, capsys
