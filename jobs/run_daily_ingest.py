@@ -78,18 +78,23 @@ def _read_journal(state: str, day: str) -> dict:
         return {}
 
 
+def _write_json_atomic(path: str, obj) -> None:
+    """Write *obj* to *path* atomically: tmp file, fsync, os.replace."""
+    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 def _advance_journal(state: str, day: str, **fields) -> dict:
-    """Merge *fields* into the day's journal atomically (tmp + os.replace)."""
+    """Merge *fields* into the day's journal atomically."""
     journal = _read_journal(state, day)
     journal.update(fields)
     path = _journal_path(state, day)
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(journal, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+    _write_json_atomic(path, journal)
     return journal
 
 
@@ -154,7 +159,7 @@ def main(argv=None, spark=None) -> int:
         minhash_signatures,
         write_dedup_index,
     )
-    from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
+    from pdf_drawing_ocr_recognition_spark.operators.extract import EXTRACT_SCHEMA, extract_pages
     from pdf_drawing_ocr_recognition_spark.plans.session import build_session
     from pdf_drawing_ocr_recognition_spark.sources.pattern_registry import (
         load_patterns,
@@ -376,8 +381,8 @@ def main(argv=None, spark=None) -> int:
         if have_index:
             survivors = incremental_dedupe(
                 docs,
-                spark.read.parquet(f"{index_path}/digests"),
-                spark.read.parquet(f"{index_path}/bands"),
+                spark.read.schema("digest string, url string").parquet(f"{index_path}/digests"),
+                spark.read.schema("band_key string, url string").parquet(f"{index_path}/bands"),
                 "extracted_text",
                 "url",
                 sigs=delta_sigs,
@@ -410,7 +415,7 @@ def main(argv=None, spark=None) -> int:
     # once the survivors landed, NEVER recompute them — the index may
     # already contain today's digests, and a replayed dedup probe would
     # erase the whole day.  Read the landed output back instead.
-    kept = spark.read.parquet(out_path)
+    kept = spark.read.schema(EXTRACT_SCHEMA).parquet(out_path)  # the funnel only filters
     _fault_injection_point("after_survivors")
 
     # --- advance state AFTER the survivors are materialized -----------------
@@ -425,13 +430,10 @@ def main(argv=None, spark=None) -> int:
     if not journal.get("snapshot_done"):
         if snap_mode:
             # advance the consumption cursor (atomic; idempotent on resume)
-            cursor_path = os.path.join(args.state, "snapshot_cursor.json")
-            tmp = f"{cursor_path}.{uuid.uuid4().hex[:8]}.tmp"
-            with open(tmp, "w") as f:
-                json.dump({"last_id": journal["snap_to"]}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, cursor_path)
+            _write_json_atomic(
+                os.path.join(args.state, "snapshot_cursor.json"),
+                {"last_id": journal["snap_to"]},
+            )
         else:
             _swap_in_snapshot(staging_path, snap_path)
         journal = _advance_journal(args.state, args.day, snapshot_done=True)

@@ -9,9 +9,10 @@ Runs the manifest-resumable extraction job: one Spark job extracts every
 bucket not yet committed under <out>/_manifest, and killed runs resume
 idempotently (re-invoke with the same --out and --buckets).  The printed
 document count is the sum of the committed manifest rows' n_rows.
-Per-partition metrics are written to <out>/_metrics and a cell-count
-histogram to <out>/_metrics_cells, alongside the results and the _manifest
-lineage.
+Per-bucket metrics (docs, html bytes and the wall of the job that extracted
+the bucket, one row per _manifest row, built with no Spark job over the
+input) are written to <out>/_metrics and a cell-count histogram to
+<out>/_metrics_cells, alongside the results and the _manifest lineage.
 """
 
 from __future__ import annotations
@@ -39,8 +40,8 @@ def main(argv=None, spark=None) -> int:
     from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
     from pdf_drawing_ocr_recognition_spark.operators.manifest import manifest_rows, run_with_manifest
     from pdf_drawing_ocr_recognition_spark.operators.metrics import (
+        bucket_metrics,
         cell_count_histogram,
-        partition_metrics,
     )
     from pdf_drawing_ocr_recognition_spark.plans.session import build_session
     from pdf_drawing_ocr_recognition_spark.sources.pages import read_pages
@@ -68,7 +69,7 @@ def main(argv=None, spark=None) -> int:
         n_buckets=args.buckets,
     )
     n = sum(row["n_rows"] for row in manifest_rows(args.out))
-    partition_metrics(pages).write.mode("overwrite").parquet(f"{args.out}/_metrics")
+    bucket_metrics(spark, args.out).write.mode("overwrite").parquet(f"{args.out}/_metrics")
     cell_count_histogram(result).write.mode("overwrite").parquet(
         f"{args.out}/_metrics_cells"
     )

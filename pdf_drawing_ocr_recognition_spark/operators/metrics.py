@@ -5,21 +5,15 @@ The reference records a single wall-clock ``time_cost`` per document
 partition: docs/s, bytes/s and cell-count histograms per Spark partition,
 emitted as ordinary rows so they can be written alongside results and
 aggregated with the same engine (BASELINE.json north_rule: "per-partition
-lineage + metrics").
+lineage + metrics").  The bucketed job's unit of work is the manifest bucket,
+so its rows come from the manifest the extraction itself committed.
 """
 
 from __future__ import annotations
 
-import time
-from typing import Iterator
+from pyspark.sql import DataFrame, SparkSession
 
-import pandas as pd
-from pyspark.sql import DataFrame
-
-METRICS_SCHEMA = (
-    "partition_id INT, n_docs LONG, n_bytes LONG, wall_s DOUBLE, "
-    "docs_per_s DOUBLE, bytes_per_s DOUBLE"
-)
+from .manifest import read_manifest
 
 
 def cell_count_histogram(extracted: "DataFrame", bucket_width: int = 8) -> "DataFrame":
@@ -38,32 +32,12 @@ def cell_count_histogram(extracted: "DataFrame", bucket_width: int = 8) -> "Data
     )
 
 
-def partition_metrics(pages: DataFrame) -> DataFrame:
-    """One metrics row per input partition: docs/s + bytes/s of a scan pass."""
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        t0 = time.time()
-        n_docs = 0
-        n_bytes = 0
-        for pdf in it:
-            n_docs += len(pdf)
-            if "html" in pdf.columns:
-                n_bytes += int(pdf["html"].map(lambda b: len(b) if b is not None else 0).sum())
-        wall = max(time.time() - t0, 1e-9)
-        yield pd.DataFrame(
-            [
-                {
-                    "partition_id": pid,
-                    "n_docs": n_docs,
-                    "n_bytes": n_bytes,
-                    "wall_s": wall,
-                    "docs_per_s": n_docs / wall,
-                    "bytes_per_s": n_bytes / wall,
-                }
-            ]
-        )
-
-    return pages.mapInPandas(run, METRICS_SCHEMA)
+def bucket_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
+    """One row per bucket committed under *output_dir*: the docs and html
+    bytes its manifest row records, over the wall of the job that extracted
+    it.  No Spark job reads the input; rows that record no ``n_bytes`` give
+    NULL bytes."""
+    return read_manifest(spark, output_dir).selectExpr(
+        "bucket AS partition_id", "n_rows AS n_docs", "n_bytes", "wall_s",
+        "n_rows / wall_s AS docs_per_s", "n_bytes / wall_s AS bytes_per_s",
+    )

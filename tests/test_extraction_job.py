@@ -1,6 +1,6 @@
 """The manifest extraction job (jobs/run_extraction.py) end to end: output per
-url, the printed count, a no-op rerun, and a run whose input filters to
-nothing."""
+url, the printed count, the per-bucket metrics, a no-op rerun, and a run
+whose input filters to nothing."""
 
 import os
 import re
@@ -74,7 +74,16 @@ def _run(spark, capsys, tmp_path, out: str, *extra) -> int:
     return int(re.fullmatch(r"extraction complete: (\d+) documents → .*", line).group(1))
 
 
+def _metrics_rows(spark, out: str) -> list[dict]:
+    return sorted(
+        (r.asDict() for r in spark.read.parquet(f"{out}/_metrics").collect()),
+        key=lambda r: r["partition_id"],
+    )
+
+
 def test_job_output_count_and_noop_rerun(spark, capsys, job_inputs):
+    from pdf_drawing_ocr_recognition_spark.operators.manifest import manifest_rows
+
     tmp_path, rows_seen = job_inputs
     out = str(tmp_path / "out")
     n = _run(spark, capsys, tmp_path, out)
@@ -90,8 +99,26 @@ def test_job_output_count_and_noop_rerun(spark, capsys, job_inputs):
     assert n == len(got) == landed.count()
     assert rows_seen() == n
 
+    # _metrics: one row per bucket, taken from its manifest row
+    assert spark.read.parquet(f"{out}/_metrics").schema.simpleString() == (
+        "struct<partition_id:int,n_docs:bigint,n_bytes:bigint,wall_s:double,"
+        "docs_per_s:double,bytes_per_s:double>"
+    )
+    metrics = _metrics_rows(spark, out)
+    committed = sorted(manifest_rows(out), key=lambda r: r["bucket"])
+    assert [
+        (m["partition_id"], m["n_docs"], m["n_bytes"], m["wall_s"]) for m in metrics
+    ] == [(r["bucket"], r["n_rows"], r["n_bytes"], r["wall_s"]) for r in committed]
+    assert len(metrics) == 4
+    assert sum(m["n_docs"] for m in metrics) == n
+    assert sum(m["n_bytes"] for m in metrics) == sum(
+        len(html or b"") for _url, _ts, html, _text, lang in gen_rows(N_ROWS)
+        if lang in ("en", "zh", "de")
+    )
+
     assert _run(spark, capsys, tmp_path, out) == n
     assert rows_seen() == 0  # everything committed: the kernel never runs
+    assert _metrics_rows(spark, out) == metrics
 
 
 def test_job_with_every_page_filtered_out_prints_zero(spark, capsys, job_inputs):

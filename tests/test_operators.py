@@ -1,4 +1,4 @@
-"""Operator-level Spark tests: manifest resume, salted aggregation, metrics,
+"""Operator-level Spark tests: manifest resume, salted aggregation,
 multimodal plumbing."""
 
 import os
@@ -23,12 +23,19 @@ class TestManifestResume:
     def test_resume_skips_committed_buckets(self, spark, tmp_path):
         from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
         from pdf_drawing_ocr_recognition_spark.operators.manifest import (
+            bucket_of,
             read_manifest,
             run_with_manifest,
         )
 
         pages = self._pages(spark, tmp_path)
         out_dir = str(tmp_path / "out")
+        html_bytes = {
+            r["b"]: r["n"]
+            for r in pages.groupBy(bucket_of(F.col("url"), 4).alias("b"))
+            .agg(F.sum(F.octet_length("html")).alias("n"))
+            .collect()
+        }
 
         calls = []
 
@@ -46,13 +53,23 @@ class TestManifestResume:
             written = spark.read.parquet(f"{out_dir}/bucket={bucket}")
             assert row["n_rows"] == written.count()
             assert row["n_failed"] == written.filter(F.col("status") == "failed").count()
+            # the input-side Observation: html bytes of the bucket's pages
+            assert row["n_bytes"] == html_bytes[bucket]
         assert sum(r["n_failed"] for r in m.values()) > 0
 
-        # second run: everything committed → no extraction work at all
+        # second run: everything committed → no extraction work at all, and
+        # not even a Spark job (no scan, no schema inference)
         calls.clear()
-        again = run_with_manifest(spark, pages, extract_fn, out_dir, n_buckets=4)
+        sc = spark.sparkContext
+        sc.setJobGroup("noop_resume", "fully committed resume")
+        try:
+            again = run_with_manifest(spark, pages, extract_fn, out_dir, n_buckets=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(calls) == 0
         assert again.count() == n_first
+        # checked after the count: job events reach the status store async
+        assert list(sc.statusTracker().getJobIdsForGroup("noop_resume")) == []
 
     def test_partial_run_resumes_idempotently(self, spark, tmp_path):
         """Simulate a kill after bucket k: drop one manifest + its results; the
@@ -271,18 +288,6 @@ class TestSkew:
         # the skew fixture: top host carries ~half the corpus
         top = max(salted.values())
         assert top > sum(salted.values()) * 0.4
-
-
-class TestMetrics:
-    def test_partition_metrics_totals(self, spark, pages_small):
-        from pdf_drawing_ocr_recognition_spark.operators.metrics import (
-            partition_metrics,
-        )
-
-        pages = spark.read.parquet(pages_small)
-        m = partition_metrics(pages).collect()
-        assert sum(r["n_docs"] for r in m) == pages.count()
-        assert all(r["docs_per_s"] > 0 for r in m if r["n_docs"])
 
 
 class TestMultimodal:
